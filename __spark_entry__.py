@@ -57,7 +57,7 @@ _PRIORITY = [
     "moments_n_chars_by_lang", # the two-round-red cell: hashed projection now DOUBLE-FREE (n, s1..s4, mean/variance fp6 only; skew/kurt pinned by NumPy-tolerance tests)
     "join_fanout_orders_lineitem",  # oracle + operator CHANGED: saturating CASE now precedes Spark's wrapping decimal `div`, mirrored in hugeint
     "kmv_distinct_orders_by_flag",  # operator module touched: NULL-safe group-key ordering (null_last_key)
-    "kmv_overlap_orders_flags",     # group_kmv_overlap touched by the same NULL-safe ordering fix
+    "uniqueness_partkey",           # operator CHANGED: the salted two-phase agg became one combinable group-count
     # ---- r02-stale: never re-rotated since their first green row ----
     "curation_pipeline",       # composed multi-stage curation plan (exact dedup → lang id → quality gates)
     "eval_metrics_embeddings", # accuracy/P/R/F1 from label agreement
@@ -146,7 +146,7 @@ _TAIL = [
     "above_brand_avg_lineitems",  # r04 green; decorrelated scalar-avg family in-window via q18/mad_outlier cores
     "pandas_udf_token_stats",  # r04 green; Arrow scalar-iterator UDF family in-window via normalize_text_stats
     "token_count_bpe",         # r04 green; tokenization family in-window via lang_id_confusion + quality_by_source
-    "uniqueness_partkey",      # r04 green; uniqueness family in-window via fd_audit_events
+    "kmv_overlap_orders_flags",  # r05 green; KMV family in-window via kmv_distinct_orders_by_flag
     "threshold_verdict_events",  # r04 green; exact-percentile family in-window via mad_outlier_hours + tdigest_bounds_events
     "drift_kl_psi_by_source",  # r04 green; drift family in-window via topk_rank_drift_events
     "roc_auc_embeddings",      # r04 green; ordered-window family in-window via ntile_value_quartiles

@@ -19,6 +19,7 @@ kilobytes at any input scale. The baseline join is a broadcast.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -319,8 +320,8 @@ def check(
     exploded: DataFrame,
     baseline: DataFrame,
     th: DriftThresholds = DriftThresholds(),
-    persist_scores: bool = True,
-    persist_counts: bool = True,
+    cache: Callable[[DataFrame], DataFrame] | None = None,
+    cache_counts: Callable[[DataFrame], DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """distribution_drift constraint → (verdicts, violations).
 
@@ -333,32 +334,29 @@ def check(
     probabilities; with both unset the output is byte-identical to the
     KL/PSI-only contract.
 
-    ``persist_scores`` caches the per-(partition, feature) score frame —
-    it is tiny (partitions × 2 rows) but everything upstream of it (the
-    histogram agg over all spans) would otherwise run once for the verdict
-    action and again for the violation action.
+    ``cache`` (run_suite's recorder) takes the per-(partition, feature)
+    score frame — tiny (partitions × 2 rows), but everything upstream of
+    it (the histogram agg over all spans) would otherwise run once for the
+    verdict action and again for the violation action.
 
-    ONE scan of the span table total: the raw bucket counts are persisted
-    (≤ partitions × features × buckets rows — KB at any input scale) and
-    everything else — normalized histograms, the partition list for the
-    baseline cross-join, and the per-partition row counts the verdicts
-    carry — derives from that frame. The naive composition (histograms +
-    a distinct() for partitions + a groupBy for row counts) re-scanned
-    every span three times per run.
-
-    ``persist_counts``: cache the raw bucket counts. Pass False when the
-    caller already caches the exploded view (small inputs): re-deriving
-    the tiny agg from that cache is cheaper than paying another
-    materialization barrier, while at big inputs (exploded re-scanned
-    lazily) the cached counts are what keeps this a one-scan check.
+    ``cache_counts`` takes the raw bucket counts (≤ partitions × features
+    × buckets rows — KB at any input scale). Everything else — normalized
+    histograms, the partition list for the baseline cross-join, and the
+    per-partition row counts the verdicts carry — derives from that frame,
+    so with it cached this is ONE scan of the span table; the naive
+    composition (histograms + a distinct() for partitions + a groupBy for
+    row counts) re-scanned every span three times per run. The suite
+    leaves it unset when it caches the exploded view itself (small
+    inputs): re-deriving the tiny agg from that cache is cheaper than
+    another materialization barrier.
     """
     counts = (
         _bucketed(exploded)
         .groupBy("partition_id", "feature", "bucket")
         .agg(F.count("*").alias("n"))
     )
-    if persist_counts:
-        counts = counts.persist()
+    if cache_counts is not None:
+        counts = cache_counts(counts)
     total = F.sum("n").over(Window.partitionBy("partition_id", "feature"))
     cur = counts.select(
         "partition_id", "feature", "bucket", (F.col("n") / total).alias("p")
@@ -413,8 +411,8 @@ def check(
     if th.max_hellinger is not None:
         ok = ok & (F.col("hellinger") <= F.lit(th.max_hellinger))
     scored = scores.withColumn("ok", ok)
-    if persist_scores:
-        scored = scored.persist()
+    if cache is not None:
+        scored = cache(scored)
 
     detail = (
         F.format_string(

@@ -30,6 +30,7 @@ without rescans, matching the t-digest/HLL/Bloom manifest contract.
 from __future__ import annotations
 
 import struct
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
@@ -51,7 +52,7 @@ class FreqThresholds:
 def check(
     exploded: DataFrame,
     th: FreqThresholds = FreqThresholds(),
-    persist_counts: bool = True,
+    cache: Callable[[DataFrame], DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """frequent_items constraint → (verdicts, violations).
 
@@ -65,19 +66,17 @@ def check(
     ``distinct(partition_id)`` scan folds into the same aggregate. The
     counts frame (|distinct keys| rows — bounded by key cardinality, the
     documented exactness domain; unbounded columns take the MG sketch
-    path) is persisted because totals, hot keys, max-share, and both
-    output actions all re-consume it: un-persisted, one verdicts action
-    re-ran the scan+shuffle up to four times. ``persist_counts=False``
-    skips that cache — right when the caller already caches the exploded
-    view (small inputs), where re-aggregating from the cache is cheaper
-    than another materialization barrier."""
-    from pyspark.storagelevel import StorageLevel
-
+    path) is what ``cache`` (run_suite's recorder) takes, because totals,
+    hot keys, max-share, and both output actions all re-consume it:
+    uncached, one verdicts action re-ran the scan+shuffle up to four
+    times. The suite leaves ``cache`` unset when it caches the exploded
+    view itself (small inputs), where re-aggregating from that cache is
+    cheaper than another materialization barrier."""
     counts_all = exploded.groupBy("partition_id", "media_ref").agg(
         F.count("*").alias("n")
     )
-    if persist_counts:
-        counts_all = counts_all.persist(StorageLevel.MEMORY_AND_DISK)
+    if cache is not None:
+        counts_all = cache(counts_all)
     counts = counts_all.filter(F.col("media_ref").isNotNull())
     # totals derived FROM the counts (tiny); the NULL-key group keeps
     # ref-less partitions present so every partition gets a verdict

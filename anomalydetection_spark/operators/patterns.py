@@ -28,6 +28,7 @@ span table.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -142,19 +143,20 @@ def cross_column_check(exploded: DataFrame) -> tuple[DataFrame, DataFrame]:
 def fused_check(
     exploded: DataFrame,
     th: PatternThresholds = PatternThresholds(),
-    persist: bool = True,
+    cache: Callable[[DataFrame], DataFrame] | None = None,
 ) -> dict[str, tuple[DataFrame, DataFrame]]:
     """pattern + cross_column in ONE scan of the span table.
 
     Run separately, each constraint scans the narrow meta view twice (its
     violation filter and its per-partition totals) — four scans for two
     per-span predicate checks. Here one pass emits a tagged violation
-    array per span (explode drops clean spans), the frame is persisted
-    (violation-bounded, not span-bounded), and BOTH constraints' violation
-    sets, violation counts, and the shared per-partition span totals
-    derive from it plus one totals aggregate — two scans total, and the
-    outputs are row-identical to the per-constraint builders (suite
-    hash-pinned by the flagship oracle).
+    array per span (explode drops clean spans), and BOTH constraints'
+    violation sets, violation counts, and the shared per-partition span
+    totals derive from that frame plus one totals aggregate — two scans
+    total when ``cache`` (run_suite's recorder) takes the tagged frame
+    (violation-bounded, not span-bounded) and the totals. The outputs are
+    row-identical to the per-constraint builders (suite hash-pinned by the
+    flagship oracle).
 
     Returns {constraint: (verdicts, violations)}.
     """
@@ -211,16 +213,11 @@ def fused_check(
         "pos",
         F.col("_t.detail").alias("detail"),
     )
-    if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        both = both.persist(StorageLevel.MEMORY_AND_DISK)
-
     totals = exploded.groupBy("partition_id").agg(
         F.count("*").cast("long").alias("n_spans")
     )
-    if persist:
-        totals = totals.persist()
+    if cache is not None:
+        both, totals = cache(both), cache(totals)
 
     out: dict[str, tuple[DataFrame, DataFrame]] = {}
     for constraint, rate_metric in (

@@ -14,6 +14,8 @@ Invariant (BASELINE.json input_hint): for every doc,
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -152,13 +154,15 @@ def sorted_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def check(docs: DataFrame, share_violations: bool = False) -> tuple[DataFrame, DataFrame]:
+def check(
+    docs: DataFrame, cache: Callable[[DataFrame], DataFrame] | None = None
+) -> tuple[DataFrame, DataFrame]:
     """span_order constraint → (verdicts, violations).
 
-    ``share_violations``: persist the violation rows and derive the
-    verdict counts from them + a plain per-partition row count — the
-    permutation check (array_sort + sequence compare per doc) then runs
-    once instead of once per action.
+    Verdict counts derive from the violation rows plus a plain
+    per-partition row count, so when ``cache`` (run_suite's recorder)
+    caches the violations the permutation check (array_sort + sequence
+    compare per doc) runs once instead of once per action.
 
     A doc violates iff its offsets are not exactly a permutation of
     0..n_spans-1 (nulls, duplicates, gaps). Reversed-but-complete offsets
@@ -174,49 +178,28 @@ def check(docs: DataFrame, share_violations: bool = False) -> tuple[DataFrame, D
     # parquet scan reads ONLY the offset leaf — not kind/text/media_ref
     offsets = F.col("spans.offset")
     is_perm = F.array_sort(offsets) == F.sequence(F.lit(0), F.size(offsets) - 1)
-    checked = docs.select(
-        "doc_id",
-        "partition_id",
-        F.when(F.size(offsets) == 0, F.lit(True)).otherwise(is_perm).alias("ok"),
-    )
-
-    violations = checked.filter(~F.col("ok")).select(
+    ok = F.when(F.size(offsets) == 0, F.lit(True)).otherwise(is_perm)
+    violations = docs.filter(~ok).select(
         "partition_id",
         F.lit(CONSTRAINT).alias("constraint"),
         "doc_id",
         F.lit(None).cast("int").alias("pos"),
         F.lit("offsets are not a permutation of 0..n-1").alias("detail"),
     )
+    if cache is not None:
+        violations = cache(violations)
 
-    if share_violations:
-        from pyspark.storagelevel import StorageLevel
-
-        violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
-        rows = docs.groupBy("partition_id").agg(F.count("*").cast("long").alias("row_count"))
-        bad = violations.groupBy("partition_id").agg(
-            F.count("*").cast("long").alias("violation_count")
-        )
-        verdicts = rows.join(bad, "partition_id", "left").select(
-            "partition_id",
-            F.lit(CONSTRAINT).alias("constraint"),
-            (F.coalesce(F.col("violation_count"), F.lit(0)) == 0).alias("passed"),
-            F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-            "row_count",
-            F.create_map(
-                F.lit("violation_rate"),
-                F.coalesce(F.col("violation_count"), F.lit(0)) / F.col("row_count"),
-            ).alias("metrics"),
-        )
-        return verdicts, violations
-
-    verdicts = checked.groupBy("partition_id").agg(
+    rows = docs.groupBy("partition_id").agg(F.count("*").cast("long").alias("row_count"))
+    bad = violations.groupBy("partition_id").agg(
+        F.count("*").cast("long").alias("violation_count")
+    )
+    n_bad = F.coalesce(F.col("violation_count"), F.lit(0))
+    verdicts = rows.join(bad, "partition_id", "left").select(
+        "partition_id",
         F.lit(CONSTRAINT).alias("constraint"),
-        F.bool_and("ok").alias("passed"),
-        F.sum(F.when(~F.col("ok"), 1).otherwise(0)).cast("long").alias("violation_count"),
-        F.count("*").cast("long").alias("row_count"),
-        F.create_map(
-            F.lit("violation_rate"),
-            F.avg(F.when(~F.col("ok"), 1.0).otherwise(0.0)),
-        ).alias("metrics"),
+        (n_bad == 0).alias("passed"),
+        n_bad.cast("long").alias("violation_count"),
+        "row_count",
+        F.create_map(F.lit("violation_rate"), n_bad / F.col("row_count")).alias("metrics"),
     )
     return verdicts, violations

@@ -7,9 +7,9 @@ spans whose non-null ``media_ref`` has no match in ``media_assets`` become
 violation rows ``(doc_id, pos, media_ref)``.
 
 Scale design: the catalog is the small side — ``F.broadcast`` keeps the
-anti-join shuffle-free regardless of the fact side's size. If the catalog
-outgrows broadcast (multi-GB), drop the hint; AQE plans a shuffled
-sort-merge anti-join with skew splitting.
+anti-join shuffle-free regardless of the fact side's size. A catalog that
+outgrows broadcast (multi-GB) takes the Bloom pre-filter path instead
+(operators/bloom.dangling_refs_scalable).
 """
 
 from __future__ import annotations
@@ -20,20 +20,15 @@ from pyspark.sql import functions as F
 CONSTRAINT = "referential"
 
 
-def dangling_refs(exploded: DataFrame, media: DataFrame, broadcast: bool = True) -> DataFrame:
+def dangling_refs(exploded: DataFrame, media: DataFrame) -> DataFrame:
     """Span rows whose media_ref is absent from the catalog."""
     refs = exploded.filter(F.col("media_ref").isNotNull())
-    catalog = media.select("media_ref")
-    if broadcast:
-        catalog = F.broadcast(catalog)
-    return refs.join(catalog, "media_ref", "left_anti")
+    return refs.join(F.broadcast(media.select("media_ref")), "media_ref", "left_anti")
 
 
-def check(
-    exploded: DataFrame, media: DataFrame, broadcast: bool = True
-) -> tuple[DataFrame, DataFrame]:
+def check(exploded: DataFrame, media: DataFrame) -> tuple[DataFrame, DataFrame]:
     """referential constraint → (verdicts, violations)."""
-    dangling = dangling_refs(exploded, media, broadcast=broadcast)
+    dangling = dangling_refs(exploded, media)
 
     violations = dangling.select(
         "partition_id",

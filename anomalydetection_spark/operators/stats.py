@@ -20,6 +20,7 @@ NumPy's linear interpolation (reference end_to_end_prediction.py:447); at
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -47,16 +48,15 @@ def check(
     docs: DataFrame,
     exploded: DataFrame,  # the narrow meta view (reassembly.explode_spans_meta)
     th: StatsThresholds = StatsThresholds(),
-    share_violations: bool = False,
+    cache: Callable[[DataFrame], DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """column_stats constraint → (verdicts, violations).
 
-    ``share_violations``: persist the violation rows and derive the
-    verdicts' ``n_null_text`` from THEM (a per-partition count join)
-    instead of an inline conditional sum — the verdict action then
-    materializes the persisted frame, so the separate violations action
-    reuses it rather than re-scanning the span table (one fewer pass over
-    the fat text leaf per suite run; identical values either way)."""
+    The verdicts' ``n_null_text`` is a per-partition count of the
+    violation rows, so when ``cache`` (run_suite's recorder) caches that
+    frame the verdict action materializes it and the separate violations
+    action reuses it rather than re-scanning the span table (one fewer
+    pass over the fat text leaf per suite run)."""
     # --- doc-level single-pass agg ---------------------------------------
     # span count via the offset leaf (same length as spans; nested pruning
     # then reads one int leaf instead of the whole struct incl. text)
@@ -87,19 +87,12 @@ def check(
         F.col("pos").cast("int").alias("pos"),
         F.concat(F.lit("null text on kind="), F.col("kind")).alias("detail"),
     )
-    if share_violations:
-        from pyspark.storagelevel import StorageLevel
-
-        violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
-        null_counts = violations.groupBy("partition_id").agg(
-            F.count("*").cast("long").alias("n_null_text")
-        )
-
-    agg_null_text = (
-        F.sum(F.when(texty & F.col("text_len").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_null_text")
+    if cache is not None:
+        violations = cache(violations)
+    null_counts = violations.groupBy("partition_id").agg(
+        F.count("*").cast("long").alias("n_null_text")
     )
+
     moment_aggs = []
     if th.collect_moments:
         from anomalydetection_spark.operators.moments import power_sum_aggs
@@ -108,7 +101,6 @@ def check(
     span_stats = exploded.groupBy("partition_id").agg(
         F.count("*").cast("long").alias("n_spans"),
         F.sum(F.when(texty, 1).otherwise(0)).cast("long").alias("n_texty"),
-        *([] if share_violations else [agg_null_text]),
         F.avg(tlen).alias("text_len_mean"),
         F.stddev(tlen).alias("text_len_std"),
         F.min(tlen).alias("text_len_min"),
@@ -119,11 +111,11 @@ def check(
         *moment_aggs,
     )
 
-    joined = doc_stats.join(span_stats, "partition_id", "left")
-    if share_violations:
-        joined = joined.join(null_counts, "partition_id", "left").withColumn(
-            "n_null_text", F.coalesce(F.col("n_null_text"), F.lit(0)).cast("long")
-        )
+    joined = (
+        doc_stats.join(span_stats, "partition_id", "left")
+        .join(null_counts, "partition_id", "left")
+        .withColumn("n_null_text", F.coalesce(F.col("n_null_text"), F.lit(0)).cast("long"))
+    )
     null_text_rate = F.when(
         F.col("n_texty") > 0, F.col("n_null_text") / F.col("n_texty")
     ).otherwise(F.lit(0.0))
@@ -161,7 +153,7 @@ def check(
         "partition_id",
         F.lit(CONSTRAINT).alias("constraint"),
         passed.alias("passed"),
-        F.coalesce(F.col("n_null_text"), F.lit(0)).cast("long").alias("violation_count"),
+        F.col("n_null_text").alias("violation_count"),
         F.col("n_docs").cast("long").alias("row_count"),
         F.map_from_arrays(
             F.array(*metric_keys), F.array(*metric_vals)

@@ -14,8 +14,8 @@ Spec shape (every field optional; defaults = SuiteConfig defaults):
         {"type": "column_stats", "max_null_text_rate": 0.05,
          "max_empty_spans_rate": 0.05, "min_rows": 1,
          "exact_quantiles": true},
-        {"type": "uniqueness", "n_salts": 16},
-        {"type": "referential", "broadcast": true},
+        {"type": "uniqueness"},
+        {"type": "referential"},
         {"type": "distribution_drift", "max_kl": 0.05, "max_psi": 0.1,
          "epsilon": 1e-6},
         {"type": "span_order"},
@@ -25,8 +25,7 @@ Spec shape (every field optional; defaults = SuiteConfig defaults):
         {"type": "expression", "name": "caption_needs_ref",
          "expr": "size(spans) < 64", "severity": "warn"}
       ],
-      "execution": {"persist_exploded": true, "persist_violations": true,
-                    "repartition_exploded": null}
+      "execution": {"persist_exploded": true, "violation_sample_ppm": null}
     }
 
 Omitting a constraint from the list disables it. Every entry accepts
@@ -63,8 +62,8 @@ from anomalydetection_spark.plans.suite import (
 _ALLOWED_FIELDS = {
     "schema": {f.name for f in dc_fields(SchemaThresholds)},
     "column_stats": {f.name for f in dc_fields(StatsThresholds)},
-    "uniqueness": {"n_salts"},
-    "referential": {"broadcast"},
+    "uniqueness": set(),
+    "referential": set(),
     "distribution_drift": {f.name for f in dc_fields(DriftThresholds)},
     "span_order": set(),
     "frequent_items": {f.name for f in dc_fields(FreqThresholds)},
@@ -76,12 +75,7 @@ _ALLOWED_FIELDS = {
     # repeatable: one entry PER RULE, deduped by name (not by type)
     "expression": {f.name for f in dc_fields(ExpressionRule)},
 }
-_EXECUTION_FIELDS = {
-    "persist_exploded",
-    "persist_violations",
-    "repartition_exploded",
-    "violation_sample_ppm",
-}
+_EXECUTION_FIELDS = {"persist_exploded", "violation_sample_ppm"}
 
 
 def compile_spec(spec: dict) -> tuple[SuiteConfig, tuple[str, ...]]:
@@ -128,10 +122,6 @@ def compile_spec(spec: dict) -> tuple[SuiteConfig, tuple[str, ...]]:
             kwargs["stats"] = StatsThresholds(**params)
         elif ctype == "distribution_drift" and params:
             kwargs["drift"] = DriftThresholds(**params)
-        elif ctype == "uniqueness" and params:
-            kwargs["n_salts"] = params["n_salts"]
-        elif ctype == "referential" and params:
-            kwargs["broadcast_media"] = params["broadcast"]
         elif ctype == "frequent_items" and params:
             kwargs["freq"] = FreqThresholds(**params)
         elif ctype == "pattern" and params:

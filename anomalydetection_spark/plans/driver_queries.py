@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from anomalydetection_spark.operators.drift import kl_psi
-from anomalydetection_spark.operators.uniqueness import salted_duplicates
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -216,10 +215,15 @@ FROM documents GROUP BY source
 
 
 def uniqueness_partkey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine uniqueness operator (salted two-phase agg) finding keys with
-    multiplicity > 1 — l_partkey in lineitem is naturally non-unique."""
+    """Keys with multiplicity > 1 — the uniqueness operator's combinable
+    group-count (operators/uniqueness.py); l_partkey in lineitem is
+    naturally non-unique."""
     l = _t(spark, sf_dir, "lineitem")
-    return salted_duplicates(l, "l_partkey").withColumnRenamed("n", "n_rows")
+    return (
+        l.groupBy("l_partkey")
+        .agg(F.count("*").alias("n_rows"))
+        .filter(F.col("n_rows") > 1)
+    )
 
 
 UNIQUENESS_SQL = """

@@ -82,6 +82,14 @@ def _derived_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs
 
 
+def _collected(res, verdicts: DataFrame) -> DataFrame:
+    """The (partitions × constraints)-row verdict projection as a local
+    frame: collected once, after which the suite's caches are released."""
+    rows = verdicts.collect()
+    res.unpersist()
+    return verdicts.sparkSession.createDataFrame(rows, verdicts.schema)
+
+
 def suite_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checkable flagship suite: all ten constraint verdicts over
     the derived spans table, restricted to the engine-deterministic columns
@@ -96,8 +104,11 @@ def suite_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = derived_media_assets(spark)
     baseline = drift.compute_baseline(reassembly.explode_spans_meta(docs))
     res = run_suite(docs, media, baseline, SuiteConfig())
-    return res.verdicts.select(
-        "partition_id", "constraint", "passed", "violation_count", "row_count"
+    return _collected(
+        res,
+        res.verdicts.select(
+            "partition_id", "constraint", "passed", "violation_count", "row_count"
+        ),
     )
 
 
@@ -280,11 +291,14 @@ def flagship_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = derived_media_assets(spark)
     baseline = drift.compute_baseline(reassembly.explode_spans_meta(docs))
     res = run_suite(docs, media, baseline, SuiteConfig())
-    return res.verdicts.select(
-        "partition_id",
-        "constraint",
-        "passed",
-        "violation_count",
-        "row_count",
-        F.to_json("metrics").alias("metrics_json"),
-    ).orderBy("partition_id", "constraint")
+    return _collected(
+        res,
+        res.verdicts.select(
+            "partition_id",
+            "constraint",
+            "passed",
+            "violation_count",
+            "row_count",
+            F.to_json("metrics").alias("metrics_json"),
+        ).orderBy("partition_id", "constraint"),
+    )

@@ -550,6 +550,13 @@ class ResumableValidator:
         run_id = uuid.uuid4().hex[:12]
         if not todo:
             return {"run_id": run_id, "validated_partitions": [], "skipped_partitions": sorted(done)}
+        if docs_loader is not None and cfg.persist_exploded is not False:
+            # a loader-bounded pending set is the change an incremental
+            # pass re-validates: the sketch pass, the blooms probe and every
+            # constraint branch read it, so it crosses the source's reader
+            # once (a Python data source costs a worker round trip per
+            # scan), cached until the pass is written
+            pending_docs = pending_docs.persist()
 
         # sketch blobs run BEFORE the suite (one job, one scan of pending —
         # all four families at once) so the pending partitions' doc_id
@@ -650,6 +657,9 @@ class ResumableValidator:
                 fs = hpath.getFileSystem(hconf)
                 if fs.exists(hpath):
                     fs.delete(hpath, True)
+        res.unpersist()
+        if docs_loader is not None:
+            pending_docs.unpersist()
         rollup_rows = [
             {
                 **r.asDict(),

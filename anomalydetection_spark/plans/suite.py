@@ -5,7 +5,7 @@ frequent_items, pattern, cross_column) plus the span_order invariant into
 ONE lazy DataFrame DAG:
 
     scan → posexplode (once) → {stats agg | anti-join | histogram agg}
-         ⊎ doc-level {permutation check | salted uniqueness}
+         ⊎ doc-level {permutation check | uniqueness group-count}
          → union verdicts / union violations → per-partition rollup
 
 This replaces the reference's eager file-materialized stage chain
@@ -13,7 +13,8 @@ This replaces the reference's eager file-materialized stage chain
 next starts) with a single Catalyst-optimized plan: stage boundaries exist
 only at shuffles, and the exploded span view is computed once and shared
 (Spark reuses the scan; with ``persist_exploded=True`` it is cached for the
-multi-consumer fan-out).
+multi-consumer fan-out). ``run_suite`` alone decides what is cached; the
+result records it, and ``ValidationResult.unpersist`` releases it.
 """
 
 from __future__ import annotations
@@ -63,8 +64,6 @@ class SuiteConfig:
     # contract the schema constraint validates against; None = the
     # canonical interleaved-documents schema (anomalydetection_spark.schema)
     expected_schema: object | None = None
-    n_salts: int = 16
-    broadcast_media: bool = True
     # persist the (narrow, text-free) exploded span view for the
     # multi-consumer fan-out. True/False force it; None (default) applies a
     # size gate: persist only when Catalyst's plan-stats estimate for the
@@ -75,11 +74,6 @@ class SuiteConfig:
     # optimization. Unknown sizes (no stats) count as big.
     persist_exploded: bool | None = None
     persist_exploded_max_bytes: int = 8 << 30
-    # persist each constraint's violation rows (MEMORY_AND_DISK) so the
-    # verdict aggregation and the violation sink share one computation —
-    # verdicts are *derived from* violations for uniqueness/referential, so
-    # without this the anti-join / dup-detection runs twice per action
-    persist_violations: bool = True
     # deterministic sample rate (parts-per-million) applied to the emitted
     # VIOLATION rows only — verdict counts stay exact. At 10^12 docs a
     # pathological batch (every doc violating) makes the violation sink the
@@ -93,12 +87,6 @@ class SuiteConfig:
     # (e.g. run a new, still-tuning drift threshold as warn before
     # promoting it to error)
     warn_constraints: tuple[str, ...] = ()
-    # round-robin repartition of the exploded meta view before fan-out:
-    # one exchange whose shuffle files every constraint branch (and the
-    # violations job after the verdicts job) re-reads via stage reuse,
-    # instead of each branch re-scanning + re-exploding the source.
-    # None = off (small inputs, where the extra shuffle costs more).
-    repartition_exploded: int | None = None
 
 
 @dataclass
@@ -107,6 +95,15 @@ class ValidationResult:
     violations: DataFrame    # VIOLATIONS_SCHEMA
     partition_rollup: DataFrame  # (partition_id, passed, violation_count, row_count)
     warn_constraints: tuple[str, ...] = ()  # report-only, non-gating (cfg echo)
+    cached: tuple[DataFrame, ...] = ()  # every frame run_suite cached for this run
+
+    def unpersist(self) -> None:
+        """Release every frame run_suite cached for this result. Call it
+        after the last action on the result's frames; a later action still
+        returns the same rows, recomputed. Dependents go before what they
+        were derived from, so no half-released plan is re-cached."""
+        for df in reversed(self.cached):
+            df.unpersist()
 
     @property
     def global_verdicts(self) -> DataFrame:
@@ -196,26 +193,32 @@ def run_suite(
     if unknown:
         raise ValueError(f"unknown constraints: {sorted(unknown)}")
 
+    # the suite's whole cache policy lives here: operators take this
+    # recorder for the frames their verdict and violation actions share,
+    # and ValidationResult.unpersist releases what it recorded
+    cached: list[DataFrame] = []
+
+    def cache(df: DataFrame) -> DataFrame:
+        cached.append(df.persist())
+        return cached[-1]
+
+    def shared(pair: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
+        # verdicts derive from the violation rows, so caching them lets the
+        # verdict aggregation and the violation sink share one computation
+        # (without it the anti-join / dup detection runs once per action)
+        return pair[0], cache(pair[1])
+
     exploded = reassembly.explode_spans_meta(docs)
-    if cfg.repartition_exploded:
-        # round-robin, NOT by partition_id: the Iceberg partition count can
-        # be far below the cluster's task slots, and hash collisions over a
-        # small key domain would idle executors; every downstream groupBy
-        # does map-side partial aggregation anyway, so co-location buys
-        # nothing while balance buys full parallelism
-        exploded = exploded.repartition(cfg.repartition_exploded)
     persist_ex = cfg.persist_exploded
     if persist_ex is None:
         persist_ex = plan_size_bytes(docs) <= cfg.persist_exploded_max_bytes
     if persist_ex:
-        exploded = exploded.persist()
-
-    from pyspark.storagelevel import StorageLevel
-
-    def _maybe_persist(pair):
-        if not cfg.persist_violations:
-            return pair
-        return pair[0], pair[1].persist(StorageLevel.MEMORY_AND_DISK)
+        exploded = cache(exploded)
+    # key-level count aggregates are cached only when the exploded view is
+    # NOT: with the view cached (small inputs) re-deriving a KB-sized agg
+    # from it beats another materialization barrier; with lazy re-scans
+    # (big inputs) those caches are what hold each check to one scan
+    cache_counts = None if persist_ex else cache
 
     builders = {
         # structural contract check: reads only df.schema (driver-side
@@ -227,49 +230,30 @@ def run_suite(
             cfg.schema,
             expected_partitions,
         ),
-        # stats/span_order persist their own violation frames when sharing
-        # is on: their verdicts then DERIVE counts from those frames, so the
-        # violations action reuses them instead of re-scanning the span
-        # table (one fewer pass over the text leaf per run)
-        "column_stats": lambda: stats.check(
-            docs, exploded, cfg.stats, share_violations=cfg.persist_violations
-        ),
-        "uniqueness": lambda: _maybe_persist(
-            uniqueness.check(docs, n_salts=cfg.n_salts, scope_docs=uniqueness_scope)
-        ),
-        "referential": lambda: _maybe_persist(
-            referential.check(exploded, media, broadcast=cfg.broadcast_media)
-        ),
-        # intermediate count-aggregate caches only when the exploded view
-        # is NOT cached: with the view cached (small inputs) re-deriving a
-        # KB-sized agg from it beats another materialization barrier; with
-        # lazy re-scans (big inputs) those caches are what hold each check
-        # to one scan
+        "column_stats": lambda: stats.check(docs, exploded, cfg.stats, cache=cache),
+        "uniqueness": lambda: shared(uniqueness.check(docs, scope_docs=uniqueness_scope)),
+        "referential": lambda: shared(referential.check(exploded, media)),
         "distribution_drift": lambda: drift.check(
-            exploded, baseline_hist, cfg.drift, persist_counts=not persist_ex
+            exploded, baseline_hist, cfg.drift, cache=cache, cache_counts=cache_counts
         ),
-        "span_order": lambda: reassembly.check(
-            docs, share_violations=cfg.persist_violations
-        ),
-        "frequent_items": lambda: _maybe_persist(
-            freqitems.check(exploded, cfg.freq, persist_counts=not persist_ex)
-        ),
-        "pattern": lambda: _maybe_persist(patterns.pattern_check(exploded, cfg.pattern)),
-        "cross_column": lambda: _maybe_persist(patterns.cross_column_check(exploded)),
+        "span_order": lambda: reassembly.check(docs, cache=cache),
+        "frequent_items": lambda: freqitems.check(exploded, cfg.freq, cache=cache_counts),
+        "pattern": lambda: shared(patterns.pattern_check(exploded, cfg.pattern)),
+        "cross_column": lambda: shared(patterns.cross_column_check(exploded)),
         # doc-level count agg over the partition column alone — never
         # touches the span table; violations are |partitions|-bounded
         "volume": lambda: volume.check(docs, cfg.volume, expected_partitions),
         # opt-in: map-only partition-transform consistency (needs cfg.placement.expr)
-        "placement": lambda: _maybe_persist(placement.check(docs, cfg.placement)),
+        "placement": lambda: shared(placement.check(docs, cfg.placement)),
         # opt-in: event-time recency bounds (needs cfg.freshness ts_expr + as_of)
-        "freshness": lambda: _maybe_persist(freshness.check(docs, cfg.freshness)),
+        "freshness": lambda: shared(freshness.check(docs, cfg.freshness)),
     }
     # the two per-span predicate constraints fuse into ONE scan (tagged
     # violation array + shared totals, operators/patterns.fused_check) when
-    # both are selected and violation sharing is on — row-identical output,
-    # half the span-table passes for this pair
-    if cfg.persist_violations and {"pattern", "cross_column"} <= set(selected):
-        fused = patterns.fused_check(exploded, cfg.pattern, persist=True)
+    # both are selected — row-identical output, half the span-table passes
+    # for this pair
+    if {"pattern", "cross_column"} <= set(selected):
+        fused = patterns.fused_check(exploded, cfg.pattern, cache=cache)
         builders["pattern"] = lambda: fused["pattern"]
         builders["cross_column"] = lambda: fused["cross_column"]
     all_pairs = [
@@ -280,8 +264,11 @@ def run_suite(
     # config-driven opt-in (like warn_constraints): present rules always
     # evaluate — there is no meaningful default rule set to select from
     if cfg.expressions:
-        all_pairs.append(_maybe_persist(expression.check(docs, cfg.expressions)))
-    verdicts = reduce(DataFrame.unionByName, [p[0] for p in all_pairs])
+        all_pairs.append(shared(expression.check(docs, cfg.expressions)))
+    # the (partitions × constraints)-row verdict table is cached so the
+    # verdict sink, the rollup and the global view read it instead of each
+    # re-running every constraint's aggregation
+    verdicts = cache(reduce(DataFrame.unionByName, [p[0] for p in all_pairs]))
     violations = reduce(DataFrame.unionByName, [p[1] for p in all_pairs])
     if cfg.violation_sample_ppm is not None:
         # applied on TOP of the (persisted) per-constraint frames: verdict
@@ -324,6 +311,7 @@ def run_suite(
         violations=violations,
         partition_rollup=rollup,
         warn_constraints=tuple(cfg.warn_constraints),
+        cached=tuple(cached),
     )
 
 

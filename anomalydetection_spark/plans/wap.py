@@ -192,6 +192,7 @@ def write_audit_publish(
         uniqueness_scope=uniqueness_scope, constraints=constraints,
     )
     verdicts = [r.asDict() for r in result.global_verdicts.collect()]
+    result.unpersist()
     gating_failures = [
         v for v in verdicts if not v["passed"] and v["severity"] == "error"
     ]

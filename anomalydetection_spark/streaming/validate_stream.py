@@ -79,19 +79,18 @@ def start_validation_stream(
 
     # the SAME declarative spec that drives batch and resumable runs drives
     # the stream (plans/declarative.py): compiled ONCE at start, not per
-    # micro-batch; spec=None keeps the full default suite. Execution knobs
-    # are overridden to the streaming-appropriate ones (micro-batches are
-    # small — persist the exploded view; violations are written once, not
-    # re-consumed — skip persisting them).
+    # micro-batch; spec=None keeps the full default suite. Micro-batches
+    # are small, so the exploded view is always cached; each batch
+    # releases what its run cached once its outputs are written.
     if spec is not None:
         from dataclasses import replace
 
         from anomalydetection_spark.plans.declarative import compile_spec
 
         base_cfg, selected = compile_spec(spec)
-        batch_cfg = replace(base_cfg, persist_exploded=True, persist_violations=False)
+        batch_cfg = replace(base_cfg, persist_exploded=True)
     else:
-        batch_cfg = SuiteConfig(persist_exploded=True, persist_violations=False)
+        batch_cfg = SuiteConfig(persist_exploded=True)
         selected = None
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -146,6 +145,7 @@ def start_validation_stream(
             append_metrics_history(
                 spark, out_dir, f"stream-batch-{batch_id}", rollup_rows
             )
+        res.unpersist()
 
     return (
         stream.writeStream.foreachBatch(process)

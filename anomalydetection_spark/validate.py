@@ -113,7 +113,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--out", help="output dir for verdicts/violations parquet")
     ap.add_argument("--master", default=None, help="override spark master (tests)")
     ap.add_argument("--state-dir", help="manifest dir → resumable run (only unfinished partitions re-validate)")
-    ap.add_argument("--n-salts", type=int, default=16, help="salt count for the uniqueness aggregate")
     ap.add_argument("--max-null-text-rate", type=float, default=0.05)
     ap.add_argument("--max-kl", type=float, default=0.05)
     ap.add_argument("--max-psi", type=float, default=0.1)
@@ -331,7 +330,6 @@ def main(argv: list[str] | None = None) -> int:
                 if args.ref_pattern
                 else PatternThresholds()
             ),
-            n_salts=args.n_salts,
             # flag forces the cache OFF; otherwise the size gate decides
             persist_exploded=False if args.no_persist_exploded else None,
         )
@@ -382,7 +380,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         n_viol = v.violations().count()
         elapsed = time.time() - t0
-        n_docs = docs.count()
         summary = {
             "resumable": True,
             "validated_partitions": run_info["validated_partitions"],
@@ -470,9 +467,9 @@ def main(argv: list[str] | None = None) -> int:
         vd = verdicts
         n_viol = res.violations.count()
     fields, print_verdicts = _verdict_report(vd, args.max_verdict_rows)
-    elapsed = time.time() - t0
-
+    res.unpersist()
     n_docs = docs.count()
+    elapsed = time.time() - t0
     summary = {
         "n_docs": n_docs,
         "elapsed_sec": round(elapsed, 3),

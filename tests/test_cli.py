@@ -24,8 +24,14 @@ def test_cli_end_to_end_with_resume_and_overlap_report(spark, tmp_path, capsys):
         "--n-docs", "2000", "--n-partitions", "4", "--drift-partitions", "3",
         "--state-dir", state, "--out", out_dir,
     ]
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()  # noqa: SLF001
+
+    before = n_persisted()
     rc, out = _run(capsys, base)
     assert rc == 0
+    # main releases every cache its suite run made
+    assert n_persisted() <= before
     summary = json.loads(
         next(l for l in out.splitlines() if l.startswith("{"))
     )

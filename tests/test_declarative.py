@@ -98,7 +98,7 @@ def test_spec_matches_programmatic_config(spark, inputs):
         "constraints": [
             {"type": "schema", "mode": "compatible"},
             {"type": "column_stats", "max_null_text_rate": 0.01},
-            {"type": "uniqueness", "n_salts": 4},
+            {"type": "uniqueness"},
             {"type": "referential"},
             {"type": "distribution_drift"},
             {"type": "span_order"},
@@ -119,7 +119,6 @@ def test_spec_matches_programmatic_config(spark, inputs):
     cfg = SuiteConfig(
         stats=StatsThresholds(max_null_text_rate=0.01),
         freq=FreqThresholds(max_ref_share=0.04),
-        n_salts=4,
         persist_exploded=False,
     )
     b = sorted(
@@ -138,6 +137,14 @@ def test_fail_fast_on_bad_spec():
         compile_spec({"constraints": [{"type": "span_order"}, {"type": "span_order"}]})
     with pytest.raises(ValueError, match="unknown execution"):
         compile_spec({"execution": {"cache": True}})
+    # removed plan knobs are typos now, not silently ignored settings
+    with pytest.raises(ValueError, match="unknown fields"):
+        compile_spec({"constraints": [{"type": "uniqueness", "n_salts": 16}]})
+    with pytest.raises(ValueError, match="unknown fields"):
+        compile_spec({"constraints": [{"type": "referential", "broadcast": True}]})
+    for knob in ("persist_violations", "repartition_exploded"):
+        with pytest.raises(ValueError, match="unknown execution"):
+            compile_spec({"execution": {knob: None}})
 
 
 def test_shipped_example_spec_compiles():

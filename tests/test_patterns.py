@@ -128,7 +128,7 @@ def test_fused_check_parity_and_single_scan(spark, tmp_path):
     generate_documents(spark, cfg).write.parquet(path)
     exploded = reassembly.explode_spans_meta(spark.read.parquet(path))
 
-    fused = fused_check(exploded, persist=False)
+    fused = fused_check(exploded)
     plain = {
         "pattern": pattern_check(exploded),
         "cross_column": cross_column_check(exploded),
@@ -148,7 +148,7 @@ def test_fused_check_parity_and_single_scan(spark, tmp_path):
     # the fused frame is built once; both branches filter the same scan —
     # formatted explain numbers each distinct scan node once
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) <= 2  # one per branch pre-persist
-    fused_p = fused_check(exploded, persist=True)
+    fused_p = fused_check(exploded, cache=lambda df: df.persist())
     bothp = fused_p["pattern"][1].unionByName(fused_p["cross_column"][1])
     bothp.count()
     planp = spark._jvm.PythonSQLUtils.explainString(  # noqa: SLF001

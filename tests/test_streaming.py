@@ -38,11 +38,20 @@ def stream_env(spark, tmp_path_factory):
 
 def test_foreach_batch_validation(spark, stream_env):
     root, indir, docs, media, baseline = stream_env
+    # materialize the fixture's own caches first, so the count below moves
+    # only with what the micro-batches leave behind
+    media.count(), baseline.count()
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()  # noqa: SLF001
+
+    before = n_persisted()
     q = start_validation_stream(
         spark, indir, media, baseline,
         str(root / "out"), str(root / "ckpt"),
     )
     q.awaitTermination(120)
+    # each micro-batch releases what its suite run cached
+    assert n_persisted() <= before
     verdicts = spark.read.parquet(str(root / "out" / "verdicts"))
     # every (partition, constraint) appears exactly once across batches
     from anomalydetection_spark.plans.suite import ALL_CONSTRAINTS
