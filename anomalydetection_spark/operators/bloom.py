@@ -1,12 +1,12 @@
-"""Mergeable Bloom-filter sketches + the shuffle-minimal referential path.
+"""The engine's one Bloom filter + the shuffle-minimal referential path.
 
 Third sketch family next to operators/tdigest.py (quantiles) and
 operators/hll.py (distinct counts): a Bloom filter is the membership
 sketch — "definitely absent" / "maybe present" with a tunable false-
 positive rate and NO false negatives. Like the other two it is a byte
-blob with a cheap merge (bitwise OR), so per-Iceberg-partition catalog
-sketches can be built once, stored in the run manifest, and combined
-across resumed runs without rescanning finished partitions (X2/S8).
+blob, so per-Iceberg-partition sketches can be built once, stored in the
+run manifest, and probed by resumed runs without rescanning finished
+partitions (X2/S8).
 
 Where the reference keeps its membership set as an in-memory pandas
 index (`isin` filter, preprocessing.py:7-10), this engine needs the
@@ -28,18 +28,43 @@ The final answer is EXACTLY the plain anti-join's (false positives are
 re-checked; false negatives don't exist), so the operator stays inside
 the DuckDB oracle gate.
 
-Membership testing is pure JVM column expressions: the word array is a
-plan literal (broadcast with the task binaries), probes are k xxhash64
-evaluations + element_at + bitwise AND — whole-stage codegen, no
-Python, no shuffle. The literal-array regime covers catalogs up to
-~10^7 keys (m = 2^24 → 2 MB plan literal); beyond that, ship the blob
-with `SparkContext.broadcast` and probe in a vectorized Arrow batch
-(same blob format), or lean on AQE's runtime bloom-filter join — the
-sketch contract here is what makes the state resumable either way.
+One format, one hash family, one sizing rule for every Bloom in the
+engine — this module's, the run manifest's per-partition doc_id and
+media_ref Blooms (plans/manifest.py) and the docstore's per-file
+sidecars (sources/docstore.py):
+
+* **hash**: ``dedup.portable_hash60`` of the key cast to string (md5 →
+  60 bits, the family KMV, sharding and sampling already use); ints hash
+  by their decimal string, exactly as Spark's ``cast(int as string)``.
+  :func:`key_hashes` is the Python mirror.
+* **probes**: ``(h1 + i·h2) mod m`` for i < k, with ``h1`` the low 30
+  bits and ``h2`` the high 30 bits forced odd. The sum stays below 2^35,
+  so the probe is exact both as JVM long arithmetic (ANSI-safe) and in
+  NumPy.
+* **sizing**: :func:`num_bits` gives 16 bits per distinct key with k=11
+  (fill ≈ 0.5, fpp ≈ 5·10⁻⁴), and never fewer than 2^17 bits: a resumed
+  run probes EVERY pending doc_id, not only new ones, so a small
+  partition's filter must keep its fpp far below 1/keys (at 2,500 keys
+  the floor gives 1·10⁻⁸; 16 bits/key alone made all 5 of 5 done
+  partitions false-hit). Callers that never see their key count (dedup,
+  referential) pass an explicit m.
+* **format**: ``BF02 | m_bits | k | seed | m_bits/64 int64 words``; the
+  seed field is always 0. A blob with any other magic — old BF01 blobs
+  hashed with xxhash64, headerless pre-BF02 docstore sidecars — counts
+  as ABSENT (:func:`unpack_blob` returns None): it is never probed with
+  this family, which would give false negatives.
+
+Builds and probes run in two places over that one rule: JVM column
+expressions (:func:`build_words` / :func:`might_contain` — the word
+array rides as a plan literal, so the literal regime caps m at
+:data:`LITERAL_MAX_BITS` = 2^24 bits, a 2 MB literal), and one NumPy
+kernel (:func:`blob_from_hashes` / :func:`contains`) for the manifest,
+the docstore and the resume probes.
 """
 
 from __future__ import annotations
 
+import hashlib
 import struct
 from functools import reduce
 
@@ -47,21 +72,102 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MAGIC = b"BF01"
+MAGIC = b"BF02"
+BITS_PER_KEY = 16
+MIN_BITS = 1 << 17
+K = 11
+LITERAL_MAX_BITS = 1 << 24
+DEFAULT_M_BITS = 1 << 20  # for callers that never see their key count
 
-DEFAULT_M_BITS = 1 << 20  # 128 KB of words; fpp ~0.8% at 10^5 keys, k=5
-DEFAULT_K = 5
-DEFAULT_SEED = 0x5EED
+_LOW30 = (1 << 30) - 1
+_HEADER = struct.Struct("<QII")  # m_bits, k, seed
 
 
-def _probe(col: Column, i: int, m_bits: int, seed: int) -> tuple[Column, Column]:
-    """(word_idx:int, bit_mask:long) of probe ``i`` — all JVM expressions.
+def num_bits(n_keys: int) -> int:
+    """m for ``n_keys`` distinct keys: 16 bits each in whole 64-bit
+    words, at least :data:`MIN_BITS`."""
+    return max(MIN_BITS, -(-int(n_keys) * BITS_PER_KEY // 64) * 64)
 
-    xxhash64 over (value, seed+i) gives k independent probe streams with
-    no Python-side hashing to keep in sync (the same expressions run at
-    build and at test time, so false negatives are structurally
-    impossible)."""
-    pos = F.pmod(F.xxhash64(col, F.lit(seed + i)), F.lit(m_bits))
+
+def key_hash(col: Column) -> Column:
+    """JVM key hash: ``portable_hash60(cast(col as string))``."""
+    from anomalydetection_spark.operators.dedup import portable_hash60
+
+    return portable_hash60(col.cast("string"))
+
+
+def key_hashes(values) -> np.ndarray:
+    """Python mirror of :func:`key_hash` for int and str keys (TypeError
+    for anything else: its string form would not match Spark's cast)."""
+    out = np.empty(len(values), dtype=np.int64)
+    for j, v in enumerate(values):
+        if isinstance(v, (bool, np.bool_)) or not isinstance(v, (int, np.integer, str)):
+            raise TypeError("bloom keys must be int or string")
+        out[j] = int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16)
+    return out
+
+
+def _pack(m_bits: int, k: int, words: np.ndarray) -> bytes:
+    return MAGIC + _HEADER.pack(m_bits, k, 0) + words.astype(np.int64).tobytes()
+
+
+def unpack_blob(blob: bytes) -> tuple[int, int, int, np.ndarray] | None:
+    """(m_bits, k, seed, words), or None for a blob of another format —
+    callers treat it as absent (no pruning, re-validate)."""
+    if blob[:4] != MAGIC:
+        return None
+    m_bits, k, seed = _HEADER.unpack_from(blob, 4)
+    words = np.frombuffer(blob, dtype=np.int64, offset=4 + _HEADER.size)
+    assert words.size == m_bits // 64
+    return m_bits, k, seed, words
+
+
+def _positions(h: np.ndarray, i: int, m_bits: int) -> np.ndarray:
+    h = np.asarray(h, dtype=np.int64)
+    return ((h & _LOW30) + i * ((h >> 30) | 1)) % m_bits
+
+
+def blob_from_hashes(hashes, m_bits: int | None = None) -> bytes:
+    """NumPy build over :func:`key_hash` values; m defaults to
+    :func:`num_bits` of the distinct hash count."""
+    h = np.unique(np.asarray(hashes, dtype=np.int64))
+    m = num_bits(len(h)) if m_bits is None else m_bits
+    words = np.zeros(m // 64, dtype=np.uint64)
+    for i in range(K):
+        pos = _positions(h, i, m)
+        np.bitwise_or.at(words, pos >> 6, np.left_shift(np.uint64(1), (pos & 63).astype(np.uint64)))
+    return _pack(m, K, words)
+
+
+def contains(m_bits: int, k: int, words: np.ndarray, hashes) -> np.ndarray:
+    """Per-hash membership (bool array) against unpacked filter words."""
+    h = np.asarray(hashes, dtype=np.int64)
+    w = words.view(np.uint64)
+    alive = np.ones(len(h), dtype=bool)
+    for i in range(k):
+        pos = _positions(h, i, m_bits)
+        alive &= ((w[pos >> 6] >> (pos & 63).astype(np.uint64)) & np.uint64(1)).astype(bool)
+    return alive
+
+
+def may_contain_any(blob: bytes, hashes) -> bool:
+    """False only when the blob proves EVERY hashed key absent; an
+    other-format blob proves nothing."""
+    u = unpack_blob(blob)
+    if u is None:
+        return True
+    m_bits, k, _, words = u
+    return bool(contains(m_bits, k, words, hashes).any())
+
+
+def _probe(h: Column, i: int, m_bits: int) -> tuple[Column, Column]:
+    """(word_idx:int, bit_mask:long) of probe ``i`` of key hash ``h`` —
+    the JVM side of :func:`_positions`."""
+    h2 = F.shiftright(h, 30).bitwiseOR(F.lit(1).cast("long"))
+    pos = F.pmod(
+        h.bitwiseAND(F.lit(_LOW30).cast("long")) + F.lit(i).cast("long") * h2,
+        F.lit(m_bits).cast("long"),
+    )
     word = F.floor(pos / 64).cast("int")
     mask = F.call_function(
         "shiftleft", F.lit(1).cast("long"), F.pmod(pos, F.lit(64)).cast("int")
@@ -70,23 +176,18 @@ def _probe(col: Column, i: int, m_bits: int, seed: int) -> tuple[Column, Column]
 
 
 def build_words(
-    df: DataFrame,
-    col: str | Column,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-    seed: int = DEFAULT_SEED,
+    df: DataFrame, col: str | Column, m_bits: int = DEFAULT_M_BITS
 ) -> DataFrame:
     """One pass over ``df`` → sparse (word_idx, bits) rows of the filter.
 
     k (word, mask) pairs per key explode into rows, then ONE hash
     aggregate with map-side `bit_or` partials merges them — the shuffle
-    carries at most min(k·|keys|, m/64) rows of two small ints. Partial
-    filters from different inputs (or resumed runs) merge by unioning
-    the word rows and re-aggregating — OR is associative."""
+    carries at most min(k·|keys|, m/64) rows of two small ints."""
     c = F.col(col) if isinstance(col, str) else col
+    h = key_hash(c)
     entries = [
         F.struct(w.alias("w"), m.alias("m"))
-        for w, m in (_probe(c, i, m_bits, seed) for i in range(k))
+        for w, m in (_probe(h, i, m_bits) for i in range(K))
     ]
     return (
         df.filter(c.isNotNull())
@@ -97,91 +198,19 @@ def build_words(
     )
 
 
-def words_to_blob(
-    word_rows, m_bits: int = DEFAULT_M_BITS, k: int = DEFAULT_K, seed: int = DEFAULT_SEED
-) -> bytes:
-    """Pack collected (word_idx, bits) rows into a manifest-storable blob.
-
-    Layout: magic | m_bits | k | seed | m_bits/64 little-endian int64
-    words. The collect is bounded by the filter size (m/64 rows), never
-    the key count."""
+def words_to_blob(word_rows, m_bits: int = DEFAULT_M_BITS) -> bytes:
+    """Pack collected (word_idx, bits) rows into a blob. The collect is
+    bounded by the filter size (m/64 rows), never the key count."""
     words = np.zeros(m_bits // 64, dtype=np.int64)
     for r in word_rows:
         words[r["word_idx"]] = r["bits"]
-    return MAGIC + struct.pack("<QII", m_bits, k, seed) + words.tobytes()
+    return _pack(m_bits, K, words)
 
 
 def blob_from_df(
-    df: DataFrame,
-    col: str | Column,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-    seed: int = DEFAULT_SEED,
+    df: DataFrame, col: str | Column, m_bits: int = DEFAULT_M_BITS
 ) -> bytes:
-    return words_to_blob(
-        build_words(df, col, m_bits=m_bits, k=k, seed=seed).collect(), m_bits, k, seed
-    )
-
-
-def unpack_blob(blob: bytes) -> tuple[int, int, int, np.ndarray]:
-    assert blob[:4] == MAGIC, "unknown bloom blob version"
-    m_bits, k, seed = struct.unpack_from("<QII", blob, 4)
-    words = np.frombuffer(blob, dtype=np.int64, offset=4 + 16)
-    assert words.size == m_bits // 64
-    return m_bits, k, seed, words
-
-
-def merge_blobs(a: bytes, b: bytes) -> bytes:
-    """Bitwise-OR merge — the Bloom union. Parameters must match (same
-    hash family), mirroring HLL precision / t-digest delta checks."""
-    ma, ka, sa, wa = unpack_blob(a)
-    mb, kb, sb, wb = unpack_blob(b)
-    assert (ma, ka, sa) == (mb, kb, sb), "incompatible bloom parameters"
-    return MAGIC + struct.pack("<QII", ma, ka, sa) + (wa | wb).tobytes()
-
-
-def probe_positions(
-    col: Column,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-    seed: int = DEFAULT_SEED,
-) -> Column:
-    """array<long> of the k probe BIT positions for ``col`` — the JVM
-    (xxhash64) half of a build whose bit-setting half runs in a pandas
-    worker (manifest.group_sketch_blobs): hashing stays JVM-side and
-    identical to build_words/might_contain, so blobs built either way
-    share one hash family and interoperate (merge, intersect, probe)."""
-    return F.array(
-        *[F.pmod(F.xxhash64(col, F.lit(seed + i)), F.lit(m_bits)) for i in range(k)]
-    )
-
-
-def blob_from_positions(
-    positions: "np.ndarray",
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-    seed: int = DEFAULT_SEED,
-) -> bytes:
-    """Pack a flat int64 array of probe bit positions (from
-    :func:`probe_positions` rows) into the standard blob layout."""
-    words = np.zeros(m_bits // 64, dtype=np.uint64)
-    pos = np.asarray(positions, dtype=np.int64)
-    np.bitwise_or.at(
-        words, pos // 64, np.left_shift(np.uint64(1), (pos % 64).astype(np.uint64))
-    )
-    return MAGIC + struct.pack("<QII", m_bits, k, seed) + words.astype(np.int64).tobytes()
-
-
-def blobs_intersect(a: bytes, b: bytes) -> bool:
-    """Sound over-approximate overlap test: False ⇒ the two key sets are
-    DISJOINT for certain (a common key sets the same bits in both, so a
-    zero AND proves absence); True ⇒ maybe overlapping (fpp-bounded).
-    This is what lets a resumed run skip re-scanning finished partitions
-    whose doc_id Blooms share no bits with the pending partitions'."""
-    ma, ka, sa, wa = unpack_blob(a)
-    mb, kb, sb, wb = unpack_blob(b)
-    assert (ma, ka, sa) == (mb, kb, sb), "incompatible bloom parameters"
-    return bool(np.bitwise_and(wa, wb).any())
+    return words_to_blob(build_words(df, col, m_bits=m_bits).collect(), m_bits)
 
 
 def might_contain(col: Column, blob: bytes) -> Column:
@@ -190,11 +219,16 @@ def might_contain(col: Column, blob: bytes) -> Column:
     False ⇒ the value was never inserted (no false negatives); True ⇒
     maybe. The word array rides in the plan as an array<long> literal;
     each probe is element_at + AND — codegen'd, shuffle-free."""
-    m_bits, k, seed, words = unpack_blob(blob)
+    u = unpack_blob(blob)
+    if u is None:
+        raise ValueError("not a BF02 bloom blob")
+    m_bits, k, _, words = u
+    assert m_bits <= LITERAL_MAX_BITS, "filter too large for a plan literal"
     arr = F.lit([int(w) for w in words])
+    h = key_hash(col)
     conds = []
     for i in range(k):
-        word, mask = _probe(col, i, m_bits, seed)
+        word, mask = _probe(h, i, m_bits)
         conds.append(F.element_at(arr, word + 1).bitwiseAND(mask) != 0)
     return reduce(lambda a, b: a & b, conds)
 
@@ -205,7 +239,6 @@ def dangling_keys_scalable(
     catalog: DataFrame,
     catalog_col: str | None = None,
     m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
 ) -> DataFrame:
     """Distinct fact keys absent from the catalog — exact, via the
     distinct-first + bloom-short-circuit + verify composition.
@@ -215,7 +248,7 @@ def dangling_keys_scalable(
     keys = (
         fact.filter(F.col(ref_col).isNotNull()).select(ref_col).distinct()
     )
-    blob = blob_from_df(catalog, ccol, m_bits=m_bits, k=k)
+    blob = blob_from_df(catalog, ccol, m_bits=m_bits)
     maybe = might_contain(F.col(ref_col), blob)
     definite = keys.filter(~maybe)
     survivors = keys.filter(maybe)
@@ -229,7 +262,6 @@ def dangling_refs_scalable(
     exploded: DataFrame,
     media: DataFrame,
     m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
 ) -> DataFrame:
     """Drop-in for referential.dangling_refs when the catalog outgrows a
     broadcast hash join: same rows out, fact side never shuffled.
@@ -237,7 +269,7 @@ def dangling_refs_scalable(
     The dangling-key set (small — violations are the exception) is
     broadcast back onto the span table as a semi-join, so violation-row
     materialization is one more scan, zero shuffles."""
-    keys = dangling_keys_scalable(exploded, "media_ref", media, m_bits=m_bits, k=k)
+    keys = dangling_keys_scalable(exploded, "media_ref", media, m_bits=m_bits)
     return exploded.filter(F.col("media_ref").isNotNull()).join(
         F.broadcast(keys), "media_ref", "left_semi"
     )

@@ -154,22 +154,6 @@ LIMIT 10
 """
 
 
-def group_count_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2+A3: group count with HAVING — the reference's template frequency
-    filter (preprocessing.py:7) applied to documents.lang."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.groupBy("lang")
-        .agg(F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") > 70)
-    )
-
-
-GROUP_COUNT_SQL = """
-SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang HAVING count(*) > 70
-"""
-
-
 def stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: per-column summary stats per source (count/mean/min/max/stddev/
     quantiles) — the engine's column_stats constraint on driver data.
@@ -336,19 +320,6 @@ def referential_orphans_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey")
         .agg(F.count("*").alias("n_orphan_rows"))
     )
-
-
-def histogram_n_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A11: bucketed histogram (floor-width buckets, capped tail)."""
-    d = _t(spark, sf_dir, "documents")
-    bucket = F.least(F.floor(F.col("n_chars") / 50), F.lit(19)).cast("long")
-    return d.groupBy(bucket.alias("bucket")).agg(F.count("*").alias("n_docs"))
-
-
-HISTOGRAM_SQL = """
-SELECT cast(least(floor(n_chars / 50), 19) AS bigint) AS bucket, count(*) AS n_docs
-FROM documents GROUP BY 1
-"""
 
 
 def drift_kl_psi_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -777,46 +748,6 @@ FROM marked GROUP BY user_id
 """
 
 
-def tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 analog in batch: tumbling 1-hour windows per event_type
-    (date_trunc keeps both engines on identical UTC wall-clock buckets)."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            _dec_sum(F.col("value"), 6).alias("sum_value"),
-        )
-    )
-
-
-TUMBLING_SQL = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       event_type,
-       count(*) AS n_events,
-       cast(sum(cast(value AS decimal(18,6))) AS double) AS sum_value
-FROM events GROUP BY 1, 2
-"""
-
-
-def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1: seeded sampling made engine-portable — an md5-derived uniform
-    keeps ~10% of docs identically in Spark and the oracle (the reference's
-    seeded df.sample at end_to_end_prediction.py:271 is library-specific)."""
-    d = _t(spark, sf_dir, "documents")
-    u = F.conv(F.substring(F.md5(F.concat(F.lit("smp"), F.col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long")
-    return d.filter(F.pmod(u, F.lit(100)) < 10).select("doc_id", "lang", "n_chars")
-
-
-SAMPLE_SQL = """
-SELECT doc_id, lang, n_chars FROM documents
-WHERE ('0x' || substr(md5('smp' || cast(doc_id AS varchar)), 1, 15))::bigint % 100 < 10
-"""
-
-
 def template_mining_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Template mining (declarative Drain analog, pipeline.mine_templates):
     mask volatile numeric tokens in the event props JSON → template groups
@@ -1124,37 +1055,6 @@ SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase' AND value > 19
 """
 
 
-def running_total_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window FRAME spec (rows unbounded preceding): per-user running event
-    value total in exact decimal, sampled to the first 20 users' first 5
-    events for a bounded result set."""
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 20)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    running = (
-        F.sum(F.col("value").cast("decimal(18,6)"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("double")
-    )
-    seq = F.row_number().over(w)
-    return (
-        e.select("user_id", "event_id", running.alias("running_value"), seq.alias("seq"))
-        .filter(F.col("seq") <= 5)
-    )
-
-
-RUNNING_TOTAL_SQL = """
-SELECT user_id, event_id, running_value, seq FROM (
-  SELECT user_id, event_id,
-    cast(sum(cast(value AS decimal(18,6)))
-         OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS double)
-      AS running_value,
-    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS seq
-  FROM events WHERE user_id < 20
-) WHERE seq <= 5
-"""
-
-
 def pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (conditional aggregation): events per type per user bucket —
     one row per bucket, one column per event_type."""
@@ -1387,88 +1287,6 @@ SELECT c_count, count(*) AS custdist FROM (
   FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
   GROUP BY c_custkey)
 GROUP BY c_count
-"""
-
-
-def sql_api_revenue_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine's spark.sql() surface: tables registered as temp views,
-    the query written as SQL text (dialect-shared with the oracle modulo
-    the timestamp literal) — demonstrating that every DataFrame query here
-    has an equivalent SQL-API form."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql("""
-        SELECT o.o_orderstatus,
-               cast(sum(cast(l.l_extendedprice * (1 - l.l_discount) AS decimal(18,6))) AS double) AS revenue,
-               count(*) AS n_rows
-        FROM orders_v o JOIN lineitem_v l ON l.l_orderkey = o.o_orderkey
-        WHERE o.o_totalprice > 100000
-        GROUP BY o.o_orderstatus
-    """)
-
-
-SQL_API_SQL = """
-SELECT o.o_orderstatus,
-       cast(sum(cast(l.l_extendedprice * (1 - l.l_discount) AS decimal(18,6))) AS double) AS revenue,
-       count(*) AS n_rows
-FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE o.o_totalprice > 100000
-GROUP BY o.o_orderstatus
-"""
-
-
-def distinct_agg_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregate (A12 in agg form — plans through Expand):
-    distinct ordering customers per priority, non-final orders only,
-    alongside a plain count from the same pass."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.filter(F.col("o_orderstatus") != "F")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.countDistinct("o_custkey").alias("n_customers"),
-            F.count("*").alias("n_orders"),
-        )
-    )
-
-
-DISTINCT_AGG_SQL = """
-SELECT o_orderpriority,
-       count(DISTINCT o_custkey) AS n_customers,
-       count(*) AS n_orders
-FROM orders WHERE o_orderstatus <> 'F'
-GROUP BY o_orderpriority
-"""
-
-
-def left_join_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outer-join NULL semantics: orders joined to a restricted customer
-    dim (keys < 50) — unmatched orders keep NULL customer fields, grouped
-    under an explicit coalesce bucket (X3's no-silent-drops principle at
-    the relational level)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") < 50)
-    joined = o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"], "left")
-    return (
-        joined.groupBy(
-            F.coalesce(F.col("c_mktsegment"), F.lit("(no-match)")).alias("segment")
-        )
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("c_custkey").isNull().cast("long")).alias("n_unmatched"),
-            _dec_sum(F.col("o_totalprice")).alias("total_price"),
-        )
-    )
-
-
-LEFT_JOIN_NULL_SQL = """
-SELECT coalesce(c_mktsegment, '(no-match)') AS segment,
-       count(*) AS n_orders,
-       cast(sum(CASE WHEN c_custkey IS NULL THEN 1 ELSE 0 END) AS bigint) AS n_unmatched,
-       cast(sum(cast(o_totalprice AS decimal(18,2))) AS double) AS total_price
-FROM orders LEFT OUTER JOIN (SELECT * FROM customer WHERE c_custkey < 50) c
-  ON o_custkey = c_custkey
-GROUP BY 1
 """
 
 

@@ -183,40 +183,6 @@ def _para_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", txt.alias("text"))
 
 
-def boilerplate_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc boilerplate fraction: paragraphs whose exact text recurs in
-    ≥2 documents corpus-wide (hash-only shuffle, operators/textops.py)."""
-    corpus = _para_corpus(spark, sf_dir)
-    return textops.paragraph_boilerplate(corpus, "doc_id", "text")
-
-
-BOILERPLATE_SQL = f"""
-WITH para_corpus AS (
-  SELECT doc_id,
-    text
-    || CASE WHEN n_chars % 3 = 0 THEN chr(10) || chr(10) || '{_B1}' ELSE '' END
-    || CASE WHEN n_chars % 4 = 0 THEN chr(10) || chr(10) || '{_B2}' ELSE '' END
-    AS text
-  FROM documents
-),
-p AS (
-  SELECT doc_id,
-    ('0x' || substr(md5(unnest(string_split(text, chr(10) || chr(10)))), 1, 15))::bigint AS h
-  FROM para_corpus
-),
-dup AS (
-  SELECT h FROM (SELECT h, count(*) AS c FROM (SELECT DISTINCT doc_id, h FROM p)
-                 GROUP BY h) WHERE c >= 2
-)
-SELECT p.doc_id AS id,
-  count(*)::bigint AS n_paragraphs,
-  sum(CASE WHEN dup.h IS NOT NULL THEN 1 ELSE 0 END)::bigint AS n_boilerplate,
-  round(sum(CASE WHEN dup.h IS NOT NULL THEN 1 ELSE 0 END) / count(*), 6) AS boilerplate_frac
-FROM p LEFT JOIN dup ON p.h = dup.h
-GROUP BY p.doc_id
-"""
-
-
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pii_scan_by_source": pii_scan_by_source,
     "pack_chunks_stats": pack_chunks_stats,

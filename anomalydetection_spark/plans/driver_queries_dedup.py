@@ -47,22 +47,6 @@ def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.unionByName(extra)
 
 
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup (hash-groupBy): duplicate groups with canonical keeper."""
-    return dedup.exact_duplicates(_dup_corpus(spark, sf_dir), "doc_id", "text")
-
-
-DEDUP_EXACT_SQL = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 7 = 0
-)
-SELECT md5(lower(trim(text))) AS text_hash, count(*) AS n_docs, min(doc_id) AS keep_id
-FROM corpus GROUP BY 1 HAVING count(*) > 1
-"""
-
-
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH near-dup pairs, exact-Jaccard verified ≥ 0.5."""
     return dedup.minhash_dedup_pairs(
@@ -104,37 +88,6 @@ vp AS (SELECT i.id_a, i.id_b,
 )
 
 DEDUP_MINHASH_SQL = "WITH " + _MINHASH_VP_CTES + "SELECT id_a, id_b, jaccard FROM vp"
-
-
-def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonicalization of the near-dup pair graph
-    (dedup.connected_components): iterative min-label propagation over
-    the MinHash-verified pairs → (doc_id, canonical_id). Dropping rows
-    with doc_id != canonical_id dedups the corpus against TRANSITIVE
-    duplicate chains — the step pairwise keep-min gets wrong. The DuckDB
-    twin computes the same components with a recursive CTE."""
-    pairs = dedup.minhash_dedup_pairs(
-        _dup_corpus(spark, sf_dir), "doc_id", "text", threshold=0.5
-    )
-    comp = dedup.connected_components(pairs)
-    return comp.select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("canonical_id")
-    )
-
-
-DEDUP_COMPONENTS_SQL = (
-    "WITH RECURSIVE " + _MINHASH_VP_CTES + """,
-sym AS (SELECT id_a AS src, id_b AS dst FROM vp
-        UNION ALL SELECT id_b AS src, id_a AS dst FROM vp),
-nodes AS (SELECT DISTINCT src AS node FROM sym),
-reach(node, comp) AS (
-  SELECT node, node AS comp FROM nodes
-  UNION
-  SELECT s.dst AS node, r.comp FROM reach r JOIN sym s ON s.src = r.node
-)
-SELECT node AS doc_id, min(comp) AS canonical_id FROM reach GROUP BY node
-"""
-)
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,19 +400,6 @@ FROM scored GROUP BY source
 """
 
 
-def token_stats_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus token accounting per lang: total tokens + distinct types."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return textops.token_stats(d, "lang", "text")
-
-
-TOKEN_STATS_SQL = r"""
-SELECT lang, count(*) AS n_tokens, count(DISTINCT token) AS n_types
-FROM (SELECT lang, unnest(string_split_regex(trim(text), '\s+')) AS token FROM documents)
-GROUP BY lang
-"""
-
-
 def fingerprint_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-shingle-hash content fingerprint per doc."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -545,46 +485,6 @@ def tdigest_quantiles_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("q_50", 3).alias("q_50"),
         F.round("q_95", 3).alias("q_95"),
     )
-
-
-def multimodal_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-style frame sampling over binary payloads
-    (operators/multimodal.extract_frames): slice each payload into 64-byte
-    frames (≤16), JVM substring in a higher-order transform, then
-    per-source frame accounting. Every extracted frame is a full window,
-    so the oracle mirrors the arithmetic without slicing blobs."""
-    from anomalydetection_spark.operators import multimodal
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    payloads = d.select("doc_id", "source", F.encode("text", "utf-8").alias("content"))
-    framed = multimodal.extract_frames(payloads, "doc_id", "content", frame_size=64)
-    frame_bytes = F.aggregate(
-        "frames", F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    return (
-        payloads.select("doc_id", "source")
-        .join(framed, "doc_id")
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_payloads"),
-            F.sum(F.size("frames")).cast("long").alias("n_frames"),
-            F.sum(frame_bytes).cast("long").alias("frame_bytes"),
-        )
-    )
-
-
-MULTIMODAL_FRAMES_SQL = """
-WITH f AS (
-  SELECT doc_id, source,
-    CASE WHEN length(text) >= 64
-         THEN least(cast(floor(length(text) / 64) AS bigint), 16)
-         ELSE 0 END AS nf
-  FROM documents)
-SELECT source, count(*) AS n_payloads,
-       cast(sum(nf) AS bigint) AS n_frames,
-       cast(sum(nf * 64) AS bigint) AS frame_bytes
-FROM f GROUP BY source
-"""
 
 
 def tdigest_bounds_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -800,7 +700,7 @@ def pca_anomaly_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scores are nearest-int recoverable (floor(x*1e6+0.5)), the bigint
         # sum is exact, ONE division + det_round6 — no order-dependent float
         # sum on the hash boundary (a near-midpoint avg here went within
-        # 1e-9 of the old round-4 cliff; tools/midpoint_audit.py)
+        # 1e-9 of the old round-4 cliff)
         _det_round6_col(
             F.sum(F.floor(F.col("score") * F.lit(1000000.0) + F.lit(0.5)).cast("long"))
             .cast("double")
@@ -1437,7 +1337,7 @@ def mahalanobis_anomaly_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scores are nearest-int recoverable (floor(x*1e6+0.5)), the bigint
         # sum is exact, ONE division + det_round6 — no order-dependent float
         # sum on the hash boundary (a near-midpoint avg here went within
-        # 1e-9 of the old round-4 cliff; tools/midpoint_audit.py)
+        # 1e-9 of the old round-4 cliff)
         _det_round6_col(
             F.sum(F.floor(F.col("score") * F.lit(1000000.0) + F.lit(0.5)).cast("long"))
             .cast("double")

@@ -1063,41 +1063,6 @@ QUERIES["corr_matrix_events"] = corr_matrix_events
 ORACLE_SQL["corr_matrix_events"] = CORR_MATRIX_SQL
 
 
-# ---------------------------------------------------------------------------
-# per-group robust outliers
-# ---------------------------------------------------------------------------
-
-
-def mad_outlier_hours_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly event volumes flagged within their OWN event_type's
-    median/MAD distribution (stats.mad_outliers_grouped): an hour that is
-    anomalous for one event type may be routine for another — the
-    per-series robust variant of `mad_outlier_hours`. Grouped exact
-    percentiles over the pre-aggregated hourly frame, broadcast back."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    hours = e.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count("*").cast("long").alias("n_events"))
-    return stats.mad_outliers_grouped(hours, "event_type", "n_events", z_threshold=3.5)
-
-
-MAD_GROUPED_SQL = """
-WITH h AS (
-  SELECT event_type, date_trunc('hour', ts) AS hour, count(*)::bigint AS n_events
-  FROM events GROUP BY 1, 2
-),
-m AS (SELECT event_type, quantile_cont(n_events, 0.5) AS med FROM h GROUP BY 1),
-d AS (SELECT h.*, m.med, abs(n_events - med) AS dev FROM h JOIN m USING (event_type)),
-md AS (SELECT event_type, quantile_cont(dev, 0.5) AS mad FROM d GROUP BY 1)
-SELECT event_type, hour, n_events,
-  CASE WHEN mad > 0 THEN round(dev / mad, 6) END AS rz,
-  CASE WHEN mad > 0 THEN dev / mad > 3.5 ELSE n_events <> med END AS is_outlier
-FROM d JOIN md USING (event_type)
-"""
-
-# retired to plans/retired.py (pytest oracle gate)
-
-
 def join_fanout_orders_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-join explosion audit (operators/skew.join_fanout_audit): the
     exact predicted row count of orders ⋈ lineitem on orderkey plus the

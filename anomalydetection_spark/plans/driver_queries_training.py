@@ -529,39 +529,6 @@ ORACLE_SQL["retention_cohorts"] = RETENTION_SQL
 # ---------------------------------------------------------------------------
 
 
-def shard_assignment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Balance accounting for deterministic hash-mod training shards
-    (packing.shard_assign, 64 shards): per-shard doc, token, and char
-    totals. The assignment is the engine-portable md5 hash of the doc id —
-    reproducible across engines/runs so training jobs can resume
-    per-shard — and the query is map-only into one hash agg; the real
-    export writes with partitionBy('shard'), one shuffle on the shard
-    key."""
-    from anomalydetection_spark.operators import packing
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sharded = packing.shard_assign(d, "doc_id", 64)
-    trimmed = F.trim(F.col("text"))
-    n_tok = F.when(trimmed == "", F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
-    )
-    return sharded.groupBy("shard").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(n_tok.cast("long")).alias("n_tokens"),
-        F.sum("n_chars").alias("n_chars_total"),
-    )
-
-
-SHARD_ASSIGNMENT_SQL = r"""
-SELECT ('0x' || substr(md5(cast(doc_id AS varchar)), 1, 15))::bigint % 64 AS shard,
-  count(*)::bigint AS n_docs,
-  sum(CASE WHEN trim(text) = '' THEN 0
-      ELSE len(string_split_regex(trim(text), '\s+')) END)::bigint AS n_tokens,
-  sum(n_chars)::bigint AS n_chars_total
-FROM documents GROUP BY 1
-"""
-
-
 def epoch_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic epoch shuffle (packing.epoch_order, 16 shards, epoch
     seed 3): per-shard doc counts, a position-weighted integer checksum
@@ -602,8 +569,6 @@ FROM ordered GROUP BY shard
 
 QUERIES["epoch_order_stats"] = epoch_order_stats
 ORACLE_SQL["epoch_order_stats"] = EPOCH_ORDER_SQL
-
-# retired to plans/retired.py (pytest oracle gate)
 
 # ---------------------------------------------------------------------------
 # quality-aware duplicate-cluster canonicalization

@@ -82,11 +82,13 @@ def _derived_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs
 
 
-def _collected(res, verdicts: DataFrame) -> DataFrame:
+def _collected(res, verdicts: DataFrame, docs: DataFrame) -> DataFrame:
     """The (partitions × constraints)-row verdict projection as a local
-    frame: collected once, after which the suite's caches are released."""
+    frame: collected once, after which the suite's caches and the
+    derived spans table are released."""
     rows = verdicts.collect()
     res.unpersist()
+    docs.unpersist()
     return verdicts.sparkSession.createDataFrame(rows, verdicts.schema)
 
 
@@ -109,6 +111,7 @@ def suite_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         res.verdicts.select(
             "partition_id", "constraint", "passed", "violation_count", "row_count"
         ),
+        docs,
     )
 
 
@@ -301,4 +304,5 @@ def flagship_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "row_count",
             F.to_json("metrics").alias("metrics_json"),
         ).orderBy("partition_id", "constraint"),
+        docs,
     )

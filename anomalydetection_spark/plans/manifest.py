@@ -35,7 +35,6 @@ def group_sketch_blobs(
     compression: float = 200.0,
     p: int = 12,
     capacity: int = 256,
-    bloom_m_bits: int = 1 << 17,
 ) -> DataFrame:
     """All six manifest sketch families in ONE scan: per partition_id a
     (digest, hll, mg, bloom, ref_bloom, kmv) blob tuple — t-digest over
@@ -50,19 +49,23 @@ def group_sketch_blobs(
     every pending partition — 3× the per-run scan volume at 10^12 docs.
     Here a single mapInPandas partial builds all family partials per
     (batch × partition) and one applyInPandas merge folds them, so the
-    shuffle still moves only KB-sized blobs and the corpus streams exactly
-    once. HLL blobs are bit-identical to hll.group_hlls (register-max is
-    order-independent); t-digest and MG blobs honor the same accuracy /
-    guarantee contracts as their per-family builders (pytest-pinned),
-    though centroid/counter layout may differ with batch segmentation.
+    shuffle moves KB-sized blobs plus the Blooms' key hashes and the
+    corpus streams exactly once. HLL blobs are bit-identical to
+    hll.group_hlls (register-max is order-independent); t-digest and MG
+    blobs honor the same accuracy / guarantee contracts as their
+    per-family builders (pytest-pinned), though centroid/counter layout
+    may differ with batch segmentation.
 
-    The doc_id Bloom (``bloom_m_bits`` bits, 16 KB at the default) is what
-    bounds a RESUMED run's global-uniqueness rescan: a finished partition
-    whose Bloom shares no bits with the pending partitions' merged Bloom
-    provably holds no cross-partition duplicate against them
-    (bloom.blobs_intersect) and is skipped. Hashing is JVM xxhash64
-    (bloom.probe_positions) so these blobs share build_words' hash family;
-    a saturated filter only degrades the skip rate, never correctness.
+    The doc_id Bloom is what bounds a RESUMED run's global-uniqueness
+    rescan: a finished partition whose Bloom contains none of the pending
+    doc_ids provably holds no cross-partition duplicate against them
+    (``blooms_containing_any``) and is skipped. Both Blooms are
+    operators/bloom.py's one format, sized to the partition's distinct
+    keys (16 bits each, k=11, 2^17 bits at least): the partial ships
+    each batch's distinct key hashes (8 B per key — the ``_kh`` doc hash
+    the KMV already computes, plus a media_ref hash), and the merge
+    builds each Bloom from their union. A saturated filter would only
+    degrade the skip rate, never correctness.
 
     The media_ref Bloom is the referential analog: it records every
     media_ref a partition's spans mention (matched OR dangling), so an
@@ -75,7 +78,6 @@ def group_sketch_blobs(
     import pandas as pd
 
     from anomalydetection_spark.operators import bloom as bloomops
-    from anomalydetection_spark.operators.dedup import portable_hash60
     from anomalydetection_spark.operators.freqitems import MisraGries
     from anomalydetection_spark.operators.hll import HLL
     from anomalydetection_spark.operators.kmv import KMV
@@ -85,7 +87,7 @@ def group_sketch_blobs(
     # but this frame has one row per span — when the caller carries `pos`,
     # gate their hash expressions to the doc's first row (pos == 0, or
     # NULL for an outer-exploded zero-span doc) so the per-span scan
-    # computes one md5 + one probe array per DOC, not per span (~avg-spans×
+    # computes one md5 per DOC, not per span (~avg-spans×
     # less hashing at 10^12 spans). Without `pos` every row hashes as
     # before — duplicates are harmless to both families, only slower.
     first_row = (
@@ -100,16 +102,12 @@ def group_sketch_blobs(
         F.when(
             F.col("media_ref").isNotNull(), F.xxhash64("media_ref")
         ).alias("_h"),  # JVM-side hash, same as hll.group_hlls
-        F.when(
-            first_row,
-            bloomops.probe_positions(F.col("doc_id"), m_bits=bloom_m_bits),
-        ).alias("_bp"),
-        F.when(
-            F.col("media_ref").isNotNull(),
-            bloomops.probe_positions(F.col("media_ref"), m_bits=bloom_m_bits),
-        ).alias("_rbp"),
-        # KMV hash: the engine-portable md5 family (operators/kmv.py) so
-        # manifest blobs stay algebra-compatible with operator-built ones.
+        F.when(F.col("media_ref").isNotNull(), bloomops.key_hash(F.col("media_ref")))
+        .otherwise(F.lit(-1))
+        .alias("_rh"),
+        # doc hash for the KMV and the doc_id Bloom (bloom.key_hash): the
+        # engine-portable md5 family (operators/kmv.py), so manifest blobs
+        # stay algebra-compatible with operator-built ones.
         # Sentinel −1 (hashes are 60-bit nonnegative), NOT NULL: a nullable
         # long with NULLs crosses Arrow→pandas as float64, which rounds
         # 60-bit hashes (> 2^53) and would silently corrupt the sketch.
@@ -118,14 +116,14 @@ def group_sketch_blobs(
         # crashing the batch's int64 conversion.
         F.when(
             first_row & F.col("doc_id").isNotNull(),
-            portable_hash60(F.col("doc_id").cast("string")),
+            bloomops.key_hash(F.col("doc_id")),
         )
         .otherwise(F.lit(-1))
         .alias("_kh"),
     )
-    schema = (
+    partial_schema = (
         "partition_id int, digest binary, hll binary, mg binary, "
-        "bloom binary, ref_bloom binary, kmv binary"
+        "doc_h binary, ref_h binary, kmv binary"
     )
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -143,38 +141,35 @@ def group_sketch_blobs(
                 h.add_hashed(refs["_h"].to_numpy(dtype=np.int64))
                 mg = MisraGries(capacity)
                 mg.add_counts(refs["_ref"].astype(str).value_counts())
-                bps = g["_bp"].dropna()
-                pos = (
-                    np.concatenate(bps.to_numpy())
-                    if len(bps)
-                    else np.array([], dtype=np.int64)
-                )
-                bl = bloomops.blob_from_positions(pos, m_bits=bloom_m_bits)
-                rpos = (
-                    np.concatenate(refs["_rbp"].to_numpy())
-                    if len(refs)
-                    else np.array([], dtype=np.int64)
-                )
-                rbl = bloomops.blob_from_positions(rpos, m_bits=bloom_m_bits)
-                kv = KMV()
                 kh = g["_kh"].to_numpy(dtype=np.int64)
-                kv.add_hashed(kh[kh >= 0])
+                kh = kh[kh >= 0]
+                kv = KMV()
+                kv.add_hashed(kh)
+                rh = refs["_rh"].to_numpy(dtype=np.int64)
                 rows.append(
-                    (key, td.to_bytes(), h.to_bytes(), mg.to_bytes(), bl, rbl,
+                    (key, td.to_bytes(), h.to_bytes(), mg.to_bytes(),
+                     np.unique(kh).tobytes(), np.unique(rh).tobytes(),
                      kv.to_bytes())
                 )
             yield pd.DataFrame(
                 rows,
                 columns=[
-                    "partition_id", "digest", "hll", "mg", "bloom",
-                    "ref_bloom", "kmv",
+                    "partition_id", "digest", "hll", "mg", "doc_h",
+                    "ref_h", "kmv",
                 ],
             )
 
-    partials = narrow.mapInPandas(partial, schema)
+    partials = narrow.mapInPandas(partial, partial_schema)
 
     def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        from functools import reduce
+        import numpy as np
+
+        def bloom_of(col: str) -> bytes:
+            return bloomops.blob_from_hashes(
+                np.concatenate(
+                    [np.frombuffer(bytes(b), dtype=np.int64) for b in pdf[col]]
+                )
+            )
 
         td = TDigest(compression)
         h = HLL(p)
@@ -185,8 +180,7 @@ def group_sketch_blobs(
             h.merge(HLL.from_bytes(bytes(blob)))
         for blob in pdf["mg"]:
             mg.merge(MisraGries.from_bytes(bytes(blob)))
-        bl = reduce(bloomops.merge_blobs, (bytes(b) for b in pdf["bloom"]))
-        rbl = reduce(bloomops.merge_blobs, (bytes(b) for b in pdf["ref_bloom"]))
+        bl, rbl = bloom_of("doc_h"), bloom_of("ref_h")
         kv = KMV()
         for blob in pdf["kmv"]:
             kv.merge(KMV.from_bytes(bytes(blob)))
@@ -199,7 +193,11 @@ def group_sketch_blobs(
             ],
         )
 
-    return partials.groupBy("partition_id").applyInPandas(merge, schema)
+    return partials.groupBy("partition_id").applyInPandas(
+        merge,
+        "partition_id int, digest binary, hll binary, mg binary, "
+        "bloom binary, ref_bloom binary, kmv binary",
+    )
 
 
 def append_metrics_history(
@@ -420,65 +418,56 @@ def scope_partition_filter(
 def blooms_containing_any(
     spark: SparkSession, ids_df: DataFrame, done_blooms: dict[int, bytes]
 ) -> set[int]:
-    """Which finished partitions' doc_id Blooms contain at least one of
+    """Which finished partitions' Blooms contain at least one of
     ``ids_df``'s ids — the sound resume-scope probe: a Bloom has no false
-    negatives, so a partition NOT returned provably shares no doc_id with
-    the pending set; false positives only widen the rescan.
+    negatives, so a partition NOT returned provably shares no key with
+    the pending set; false positives only widen the rescan. A blob of an
+    older format proves nothing, so its partition is always returned.
 
-    Per-key probing, not bit-AND overlap: two Blooms each a few percent
-    full share random bits almost surely, so whole-filter intersection is
-    vacuous — membership of a SPECIFIC key (its k exact bits) carries the
-    filter's real fpp. Hashing stays JVM xxhash64 (bloom.probe_positions,
-    the build's hash family); the bit tests run vectorized in one
-    mapInPandas pass over the distinct ids with the unpacked filter words
-    broadcast once — one job regardless of partition count, no plan
-    literals (16 KB × 10⁴ blobs would otherwise bloat the plan)."""
+    Per-key probing, not bit-AND overlap: membership of a SPECIFIC key
+    carries the filter's real fpp. Each id is hashed once, JVM-side
+    (bloom.key_hash); the bit tests run through bloom.contains in one
+    mapInPandas pass with the unpacked filters broadcast once — each
+    partition's filter has its own m — so it is one job regardless of
+    partition count, with no plan literals."""
     from collections.abc import Iterator
 
-    import numpy as np
     import pandas as pd
 
     from anomalydetection_spark.operators import bloom as bloomops
 
-    if not done_blooms:
-        return set()
-    params = None
-    words: dict[int, "np.ndarray"] = {}
+    filters: dict[int, tuple] = {}
+    stale: set[int] = set()
     for pid, blob in done_blooms.items():
-        m_bits, k, seed, w = bloomops.unpack_blob(blob)
-        if params is None:
-            params = (m_bits, k, seed)
-        assert params == (m_bits, k, seed), "mixed bloom parameters in manifest"
-        words[pid] = w.astype(np.uint64)
-    m_bits, k, seed = params
-    bwords = spark.sparkContext.broadcast(words)
-
-    pos_df = ids_df.select(
-        bloomops.probe_positions(
-            ids_df[ids_df.columns[0]], m_bits=m_bits, k=k, seed=seed
-        ).alias("_bp")
+        u = bloomops.unpack_blob(blob)
+        if u is None:
+            stale.add(pid)
+        else:
+            filters[pid] = u
+    if not filters:
+        return stale
+    bfilters = spark.sparkContext.broadcast(filters)
+    c = ids_df[ids_df.columns[0]]
+    # sentinel, not NULL: a NULL-bearing long column crosses into pandas
+    # as float64, which rounds 60-bit hashes
+    hashed = ids_df.select(
+        F.coalesce(bloomops.key_hash(c), F.lit(-1)).alias("_h")
     )
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        hit: dict[int, bool] = dict.fromkeys(bwords.value, False)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pos = np.stack(pdf["_bp"].to_numpy()).astype(np.int64)  # n × k
-            wi = pos // 64
-            mask = np.left_shift(np.uint64(1), (pos % 64).astype(np.uint64))
-            for pid, w in bwords.value.items():
-                if hit[pid]:
-                    continue
-                contained = ((w[wi] & mask) != 0).all(axis=1)
-                if bool(contained.any()):
-                    hit[pid] = True
-        yield pd.DataFrame(
-            [(pid,) for pid, h in hit.items() if h], columns=["pid"]
-        )
+        import numpy as np
 
-    hits = pos_df.mapInPandas(probe, "pid int").distinct().collect()
-    return {int(r["pid"]) for r in hits}
+        hit = dict.fromkeys(bfilters.value, False)
+        for pdf in batches:
+            h = pdf["_h"].to_numpy(dtype=np.int64)
+            h = h[h >= 0]
+            for pid, (m_bits, k, _, w) in bfilters.value.items():
+                if not hit[pid] and bloomops.contains(m_bits, k, w, h).any():
+                    hit[pid] = True
+        yield pd.DataFrame([(pid,) for pid, v in hit.items() if v], columns=["pid"])
+
+    hits = hashed.mapInPandas(probe, "pid int").distinct().collect()
+    return stale | {int(r["pid"]) for r in hits}
 
 
 class ResumableValidator:
@@ -797,7 +786,9 @@ class ResumableValidator:
         form by a hash-equi self-join below the pairwise theta, and the
         estimate is integer decimal arithmetic — the driver never holds
         a P×P matrix, so 10⁵ manifest partitions stay a bounded shuffle
-        (k·P ≈ 5·10⁷ rows), not 10¹⁰ driver intersections. Partitions
+        (k·P ≈ 5·10⁷ rows), not 10¹⁰ driver intersections. Only the
+        surviving pairs collect (the CLI prints them anyway), so the
+        cached decode is released before the report returns. Partitions
         whose manifest rows predate the kmv column are absent, not
         erred."""
         from collections.abc import Iterator
@@ -838,8 +829,8 @@ class ResumableValidator:
         # persist before self-aliasing: without it each join side would
         # re-run the manifest read AND the k·P-row blob decode (round-4
         # ADVICE) — the cached rows are ≤ k·P ≈ 5·10⁷ longs at 10⁵
-        # partitions, executor-memory-sized; the ContextCleaner reclaims
-        # the block when the report frame is garbage-collected
+        # partitions, executor-memory-sized; released once the pairs
+        # are collected below
         rows = blobs.mapInPandas(
             decode, "pid int, hv long, theta long, est_distinct long"
         ).persist()
@@ -862,7 +853,7 @@ class ResumableValidator:
             f"CAST((CAST(_matches AS DECIMAL(38,0)) * CAST('{HASH_RANGE}' AS DECIMAL(38,0)))"
             " div CAST(_th AS DECIMAL(38,0)) AS BIGINT)"
         )
-        return (
+        found = (
             pairs.select(
                 "partition_a",
                 "partition_b",
@@ -872,7 +863,10 @@ class ResumableValidator:
             )
             .filter(F.col("est_common") >= int(min_est))
             .orderBy("partition_a", "partition_b")
+            .collect()
         )
+        rows.unpersist()
+        return self.spark.createDataFrame(found, out_schema)
 
     def run_reports(self) -> DataFrame:
         return self.spark.read.parquet(f"{self.out_dir}/run_reports")

@@ -58,10 +58,7 @@ def _bounded_uniqueness_scope(
     the Bloom's survivors."""
     from anomalydetection_spark.operators import bloom as bloomops
 
-    n = scoped.count()
-    m_bits = 1 << 17
-    while m_bits < 12 * max(n, 1) and m_bits < (1 << 24):
-        m_bits <<= 1
+    m_bits = min(bloomops.num_bits(scoped.count()), bloomops.LITERAL_MAX_BITS)
     blob = bloomops.blob_from_df(scoped, "doc_id", m_bits=m_bits)
     if len(audited) <= _ISIN_MAX_AUDITED:
         # NULL-partition rows are established too: ~NULL.isin(...) is

@@ -68,6 +68,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from anomalydetection_spark.operators import bloom as bloomops
+
 STATS_COLUMN = "partition_id"  # always-tracked layout column (back-compat)
 _HINT = "version-hint.text"
 
@@ -116,16 +118,16 @@ _XXP4 = 0x85EBCA77C2B2AE63
 _XXP5 = 0x27D4EB2F165667C5
 
 
-def _xxh64_long(vals, seed: int = 42):
+def _xxh64_long(vals):
     """Vectorized mirror of Spark's XXH64.hashLong (xxhash64 over a
-    bigint column, default seed 42). Returns signed int64 ndarray."""
+    bigint column, Spark's seed 42). Returns signed int64 ndarray."""
     import numpy as np
 
     with np.errstate(over="ignore"):
         x = np.asarray(vals, dtype=np.int64).view(np.uint64)
         r31, r27 = np.uint64(31), np.uint64(27)
         w = np.uint64(64)
-        h = np.uint64((seed + _XXP5 + 8) & 0xFFFFFFFFFFFFFFFF)
+        h = np.uint64((42 + _XXP5 + 8) & 0xFFFFFFFFFFFFFFFF)
         k = x * np.uint64(_XXP2)
         k = (k << r31) | (k >> (w - r31))
         k *= np.uint64(_XXP1)
@@ -193,89 +195,13 @@ def _bucket_stat_key(col: str, n: int) -> str:
 # collects unreferenced ones. Rewrites (compact/COW) drop sidecars on the
 # rewritten files — they are optional stats, never correctness.
 #
-# Double hashing (Kirsch-Mitzenmacher): probe_i = (h1 + i·h2) mod m_bits,
-# k=7, ~10 bits/key (fpp ≈ 1%); h1/h2 from the xxhash64 mirror (ints,
-# seeds 42/77) or crc32 of the utf-8 bytes plain/salted (strings) — all
-# vectorized, writer and reader share the one implementation.
+# The filters are operators/bloom.py's one format (hash, probe rule,
+# 16 bits per distinct key): writer, build_sidecars, scan planning and
+# merge_into all build and probe through its NumPy kernel. A sidecar in
+# any other format (the pre-BF02 headerless layout) never prunes.
 # ---------------------------------------------------------------------------
 
-_BLOOM_BITS_PER_KEY = 10
-_BLOOM_K = 7
 _bloom_cache: dict[str, bytes] = {}
-
-
-def _bloom_hashes(values):
-    """(h1, h2) uint64 arrays for int or string keys; h2 forced odd so
-    the probe stride never degenerates. TypeError for other types."""
-    import numpy as np
-    import zlib
-
-    if isinstance(values, np.ndarray) and values.dtype.kind in "iu":
-        with np.errstate(over="ignore"):
-            return (
-                _xxh64_long(values, seed=42).view(np.uint64).copy(),
-                _xxh64_long(values, seed=77).view(np.uint64) | np.uint64(1),
-            )
-    vals = list(values)
-    with np.errstate(over="ignore"):
-        if all(isinstance(v, int) and not isinstance(v, bool) for v in vals):
-            h1 = _xxh64_long(vals, seed=42).view(np.uint64).copy()
-            h2 = _xxh64_long(vals, seed=77).view(np.uint64)
-        elif all(isinstance(v, str) for v in vals):
-            h1 = np.array(
-                [zlib.crc32(v.encode("utf-8")) for v in vals], dtype=np.uint64
-            )
-            h2 = np.array(
-                [zlib.crc32(v.encode("utf-8") + b"\x9e") for v in vals],
-                dtype=np.uint64,
-            )
-        else:
-            raise TypeError("bloom sidecars support int and string keys")
-        return h1, h2 | np.uint64(1)
-
-
-def _bloom_build(h1, h2, n_keys: int) -> bytes:
-    import struct
-
-    import numpy as np
-
-    m = max(1024, ((n_keys * _BLOOM_BITS_PER_KEY + 63) // 64) * 64)
-    m = min(m, 1 << 31)
-    words = np.zeros(m // 64, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for i in range(_BLOOM_K):
-            pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-            np.bitwise_or.at(
-                words,
-                (pos >> np.uint64(6)).astype(np.int64),
-                np.uint64(1) << (pos & np.uint64(63)),
-            )
-    return struct.pack("<QII", m, _BLOOM_K, 0) + words.tobytes()
-
-
-def _bloom_may_contain(blob: bytes, values=None, hashes=None) -> bool:
-    """False only when EVERY wanted value is provably absent."""
-    import struct
-
-    import numpy as np
-
-    m, k, _ = struct.unpack_from("<QII", blob)
-    words = np.frombuffer(blob, dtype=np.uint64, offset=16)
-    h1, h2 = hashes if hashes is not None else _bloom_hashes(values)
-    if not len(h1):
-        return False
-    alive = np.ones(len(h1), dtype=bool)
-    with np.errstate(over="ignore"):
-        for i in range(k):
-            pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-            bits = (
-                words[(pos >> np.uint64(6)).astype(np.int64)]
-                >> (pos & np.uint64(63))
-            ) & np.uint64(1)
-            alive &= bits.astype(bool)
-            if not alive.any():
-                return False
-    return True
 
 
 def _bloom_sidecar(table_dir: str, name: str) -> bytes | None:
@@ -886,7 +812,7 @@ class DocStoreReader(DataSourceReader):
         if probes and any(f.get("blooms") for f in self.manifest["files"]):
             for col, vals in probes.items():
                 try:
-                    probe_h[col] = _bloom_hashes(sorted(vals))
+                    probe_h[col] = bloomops.key_hashes(list(vals))
                 except TypeError:
                     pass  # non-int/str values: no Bloom pruning
         eq_resolved = [
@@ -914,7 +840,7 @@ class DocStoreReader(DataSourceReader):
                     blob = (
                         _bloom_sidecar(self.table_dir, sname) if sname else None
                     )
-                    if blob is not None and not _bloom_may_contain(blob, hashes=h):
+                    if blob is not None and not bloomops.may_contain_any(blob, h):
                         pruned = True
                         break
                 if pruned:
@@ -1565,12 +1491,7 @@ class DocStoreWriter(DataSourceArrowWriter):
                     continue
                 vc = batch.column(c).drop_null()
                 if len(vc):
-                    vals = (
-                        vc.to_numpy(zero_copy_only=False)
-                        if pa.types.is_integer(vc.type)
-                        else vc.to_pylist()
-                    )
-                    bloom_acc[c].append(_bloom_hashes(vals))
+                    bloom_acc[c].append(bloomops.key_hashes(vc.to_pylist()))
         if writer is None:
             return _FilesWritten([])
         writer.close()
@@ -1584,9 +1505,7 @@ class DocStoreWriter(DataSourceArrowWriter):
             for c, parts in bloom_acc.items():
                 if not parts:
                     continue
-                h1 = np.concatenate([p[0] for p in parts])
-                h2 = np.concatenate([p[1] for p in parts])
-                blob = _bloom_build(h1, h2, len(h1))
+                blob = bloomops.blob_from_hashes(np.concatenate(parts))
                 sname = f"bloom-{stem}-{c}.bin"
                 stmp = os.path.join(self.table_dir, f"._tmp.{sname}")
                 with open(stmp, "wb") as fh:
@@ -1999,18 +1918,12 @@ def build_sidecars(spark, table_dir: str, cols, branch: str = "main") -> dict:
                 vc = pf.read(columns=[src]).column(src).drop_null().combine_chunks()
                 if not len(vc):
                     continue
-                import pyarrow as pa
-
-                vals = (
-                    vc.to_numpy(zero_copy_only=False)
-                    if pa.types.is_integer(vc.type)
-                    else vc.to_pylist()
-                )
                 try:
-                    h1, h2 = _bloom_hashes(vals)
+                    blob = bloomops.blob_from_hashes(
+                        bloomops.key_hashes(vc.to_pylist())
+                    )
                 except TypeError:
                     continue
-                blob = _bloom_build(h1, h2, len(h1))
                 stem = hashlib.sha1(path.encode()).hexdigest()[:12]
                 sname = f"bloom-{stem}-{c}.bin"
                 stmp = os.path.join(tdir, f"._tmp.{sname}")
@@ -2134,15 +2047,16 @@ def _file_pathkey_col():
     stripped, leading slash run collapsed — ``file:///a/b`` and
     ``/a/b`` both key as ``/a/b``. Column expression, so path matching
     stays a hash-joinable key instead of a per-entry endswith scan.
-    (No percent-decoding column-side: data/delete file names are
-    uuid-hex, and import paths with URI-reserved characters should be
-    renamed before add_files.)"""
+    The URI's percent-escapes are decoded (a table dir holding a space
+    reads ``%20``); a literal ``+`` is escaped first, because
+    ``url_decode`` would turn it into a space."""
     from pyspark.sql import functions as F
 
     no_scheme = F.regexp_replace(
         F.col("_file"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*:", ""
     )
-    return F.regexp_replace(no_scheme, r"^/+", "/")
+    decoded = F.url_decode(F.replace(no_scheme, F.lit("+"), F.lit("%2B")))
+    return F.regexp_replace(decoded, r"^/+", "/")
 
 
 def _read_files_visible(
@@ -2749,17 +2663,17 @@ def merge_into(
             # third tier: Bloom sidecars (unclustered layouts) — a file
             # whose key Bloom proves every update key absent can't rewrite
             try:
-                kh = _bloom_hashes(sorted(kvals))
+                kh = bloomops.key_hashes(list(kvals))
             except TypeError:
                 kh = None
-            if kh is not None and len(kh[0]):
+            if kh is not None and len(kh):
 
                 def _bloom_may(f: dict) -> bool:
                     sname = (f.get("blooms") or {}).get(key_col)
                     blob = (
                         _bloom_sidecar(table_dir, sname) if sname else None
                     )
-                    return blob is None or _bloom_may_contain(blob, hashes=kh)
+                    return blob is None or bloomops.may_contain_any(blob, kh)
 
                 probe_entries = [f for f in probe_entries if _bloom_may(f)]
     if probe_entries:
@@ -2885,6 +2799,25 @@ def _write_position_deletes(probe_df, table_dir: str) -> list:
     ).collect()
 
 
+def _attach_deletes(table_dir: str, files: list[dict], written: list):
+    """Append each written delete file to its data file's entry →
+    (new_files, n_delete_files, deleted_rows). A delete file whose
+    ``_pkey`` names no entry would count rows it never deletes, so it
+    raises instead of committing."""
+    by_file = {r["_pkey"]: (r["_dname"], int(r["_n"])) for r in written}
+    new_files = []
+    for f in files:
+        hit = by_file.pop(_entry_abspath(table_dir, f), None)
+        new_files.append(
+            {**f, "deletes": list(f.get("deletes", ())) + [hit[0]]} if hit else dict(f)
+        )
+    if by_file:
+        raise RuntimeError(
+            f"position deletes match no manifest entry: {sorted(by_file)[:3]}"
+        )
+    return new_files, len(written), sum(int(r["_n"]) for r in written)
+
+
 @_retry_on_conflict
 def delete_where_mor(spark, table_dir: str, condition: str) -> dict:
     """Merge-on-read row-level delete (the Iceberg V2 *position delete*
@@ -2933,17 +2866,9 @@ def delete_where_mor(spark, table_dir: str, condition: str) -> dict:
     written = _write_position_deletes(probe, table_dir)
     if not written:
         return {"new_version": manifest["version"], "delete_files": 0, "deleted_rows": 0}
-    by_file = {r["_pkey"]: (r["_dname"], int(r["_n"])) for r in written}
-    deleted_rows = sum(n for _, n in by_file.values())
-    new_files = []
-    n_delete_files = 0
-    for f in manifest["files"]:
-        entry = dict(f)
-        hit = by_file.get(_entry_abspath(table_dir, f))
-        if hit:
-            entry["deletes"] = list(f.get("deletes", ())) + [hit[0]]
-            n_delete_files += 1
-        new_files.append(entry)
+    new_files, n_delete_files, deleted_rows = _attach_deletes(
+        table_dir, manifest["files"], written
+    )
     v = commit_snapshot(
         table_dir, new_files, manifest["schema"],
         expected_base=base,
@@ -3104,17 +3029,9 @@ def rewrite_eq_deletes(spark, table_dir: str) -> dict:
         # distinct: a row matching several eq files must delete once;
         # bitmaps then write executor-side, positions never collected
         written = _write_position_deletes(matched.distinct(), table_dir)
-    by_file = {r["_pkey"]: (r["_dname"], int(r["_n"])) for r in written}
-    deleted_rows = sum(n for _, n in by_file.values())
-    new_files = []
-    n_delete_files = 0
-    for f in m["files"]:
-        entry = dict(f)
-        hit = by_file.get(_entry_abspath(table_dir, f))
-        if hit:
-            entry["deletes"] = list(f.get("deletes", ())) + [hit[0]]
-            n_delete_files += 1
-        new_files.append(entry)
+    new_files, n_delete_files, deleted_rows = _attach_deletes(
+        table_dir, m["files"], written
+    )
     v = commit_snapshot(
         table_dir, new_files, m["schema"],
         expected_base=base, eq_deletes=[],

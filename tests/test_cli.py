@@ -45,6 +45,7 @@ def test_cli_end_to_end_with_resume_and_overlap_report(spark, tmp_path, capsys):
     # dups -> at least one overlapping pair)
     rc2, out2 = _run(capsys, base + ["--overlap-report"])
     assert rc2 == 0
+    assert n_persisted() <= before  # the overlap report releases its decode
     s2 = json.loads(next(l for l in out2.splitlines() if l.startswith("{")))
     assert s2["validated_partitions"] == []
     rep = json.loads(

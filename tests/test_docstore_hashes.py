@@ -1,12 +1,13 @@
 """Property tests for the docstore's hash mirrors.
 
-The bucket transform and Bloom sidecars both depend on one contract: the
-numpy mirror of Spark's XXH64.hashLong (and the crc32 string path) must
-agree EXACTLY with the Spark expressions that cluster writes — a silent
-divergence would not corrupt results (pruning is planning-only, Spark
-re-applies predicates) but would quietly disable pruning. These tests pin
-the mirrors property-style; the end-to-end pruning evidence lives in
-test_docstore.py."""
+The bucket transform depends on one contract: the numpy mirror of
+Spark's XXH64.hashLong (and the crc32 string path) must agree EXACTLY
+with the Spark expressions that cluster writes — a silent divergence
+would not corrupt results (pruning is planning-only, Spark re-applies
+predicates) but would quietly disable pruning. The Bloom sidecars build
+and probe through operators/bloom.py's NumPy kernel; the cases below pin
+its no-false-negative and fpp contracts on the key types sidecars take.
+The end-to-end pruning evidence lives in test_docstore.py."""
 
 from __future__ import annotations
 
@@ -17,13 +18,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from anomalydetection_spark.sources.docstore import (
-    _bloom_build,
-    _bloom_hashes,
-    _bloom_may_contain,
-    _bucket_of,
-    _xxh64_long,
-)
+from anomalydetection_spark.operators import bloom
+from anomalydetection_spark.sources.docstore import _bucket_of, _xxh64_long
 
 I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
 
@@ -52,34 +48,33 @@ def test_bucket_of_str_matches_crc32_definition(vals, n):
     st.lists(I64, min_size=1, max_size=64, unique=True),
 )
 def test_bloom_never_false_negative_ints(members, probes):
-    h1, h2 = _bloom_hashes(np.array(members, dtype=np.int64))
-    blob = _bloom_build(h1, h2, len(members))
+    blob = bloom.blob_from_hashes(bloom.key_hashes(members))
     # every member is found
     for m in members:
-        assert _bloom_may_contain(blob, values=[m])
+        assert bloom.may_contain_any(blob, bloom.key_hashes([m]))
     # a probe list containing at least one member is always "maybe"
     if set(probes) & set(members):
-        assert _bloom_may_contain(blob, values=probes)
+        assert bloom.may_contain_any(blob, bloom.key_hashes(probes))
 
 
 @settings(max_examples=30, deadline=None)
 @given(st.lists(st.text(min_size=1, max_size=24), min_size=1, max_size=128, unique=True))
 def test_bloom_never_false_negative_strings(members):
-    h1, h2 = _bloom_hashes(members)
-    blob = _bloom_build(h1, h2, len(members))
-    assert _bloom_may_contain(blob, values=list(members))
+    blob = bloom.blob_from_hashes(bloom.key_hashes(members))
+    m_bits, k, _, words = bloom.unpack_blob(blob)
+    assert bloom.contains(m_bits, k, words, bloom.key_hashes(members)).all()
 
 
 def test_bloom_fpp_sane():
-    """~1% target at 10 bits/key, k=7: absent keys are rejected almost
-    always (the pruning win lives or dies on this)."""
+    """~5·10⁻⁴ target at 16 bits/key, k=11: absent keys are rejected
+    almost always (the pruning win lives or dies on this)."""
     rng = np.random.default_rng(42)
     members = rng.integers(-(2**62), 2**62, size=20_000, dtype=np.int64)
-    h1, h2 = _bloom_hashes(members)
-    blob = _bloom_build(h1, h2, len(members))
+    blob = bloom.blob_from_hashes(bloom.key_hashes(members))
+    m_bits, k, _, words = bloom.unpack_blob(blob)
     absent = rng.integers(2**62, 2**63 - 1, size=5_000, dtype=np.int64)
-    fp = sum(_bloom_may_contain(blob, values=[int(v)]) for v in absent)
-    assert fp / 5_000 < 0.03
+    fp = int(bloom.contains(m_bits, k, words, bloom.key_hashes(absent)).sum())
+    assert fp / 5_000 < 0.005
 
 
 def test_xxh64_mirror_matches_spark_exactly(spark):

@@ -444,3 +444,31 @@ def test_delete_files_metadata_table(spark, table):
     md2 = ds.metadata_table(spark, path, "delete_files").collect()
     assert all(r["type"] == "position" for r in md2)
     assert sum(r["rows"] for r in md2) == 4  # 1 MOR + 3 folded
+
+
+def test_mor_deletes_bind_under_space_and_plus_in_table_dir(spark, tmp_path):
+    """Spark reports ``_metadata.file_path`` as a URI, so a table dir
+    holding a space reads ``%20`` there; a literal ``+`` must survive the
+    decode. Position and folded eq deletes must still bind to their data
+    files: unbound, the deleted rows come back."""
+    ds.register(spark)
+    path = str(tmp_path / "docs dir+v1")
+    spark.range(0, 120).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 4).alias("grp")
+    ).repartition(3).write.format("docstore").option("path", path).mode("append").save()
+
+    rep = ds.delete_where_mor(spark, path, "grp = 1")
+    got = spark.read.format("docstore").option("path", path).load()
+    assert got.count() == 90 and got.filter("grp = 1").count() == 0
+    assert rep["deleted_rows"] == 30 and rep["delete_files"] == 3
+    m = ds.load_manifest(path)
+    vis = ds._read_files_visible(spark, path, m["files"], manifest=m)
+    assert vis.count() == 90 and vis.filter("grp = 1").count() == 0
+
+    ds.delete_where_eq(spark, path, "grp", [2])
+    rep2 = ds.rewrite_eq_deletes(spark, path)
+    assert rep2["deleted_rows"] == 30
+    got2 = spark.read.format("docstore").option("path", path).load()
+    assert got2.count() == 60 and got2.filter("grp IN (1, 2)").count() == 0
+    ds.compact_snapshot(spark, path, n_files=1)
+    assert spark.read.format("docstore").option("path", path).load().count() == 60

@@ -536,3 +536,16 @@ def test_epoch_order_no_global_sort(spark):
     for line in specs:
         assert "], [], [" not in line, line
         assert "shard" in line
+
+
+def test_flagship_suite_releases_its_caches(spark):
+    """suite_verdicts caches the derived spans table for its suite run
+    (under the size gate) and must release it with the suite's caches."""
+    from anomalydetection_spark.plans import flagship
+
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()  # noqa: SLF001
+
+    before = n_persisted()
+    assert flagship.suite_verdicts(spark, SF).count() > 0
+    assert n_persisted() <= before

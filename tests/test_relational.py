@@ -52,13 +52,6 @@ def test_shard_assign_balances_sequential_ids(spark):
     assert min(sizes) > 0.5 * (4000 / 16)
 
 
-def test_shard_assignment_stats_map_only_single_agg(spark):
-    plan = _formatted(spark, dqt.shard_assignment_stats(spark, SF))
-    assert "Join" not in plan
-    assert plan.count("Exchange (") == 1  # one shuffle: the final hash agg
-    assert "ReadSchema" in plan
-
-
 # ---------------------------------------------------------------------------
 # keep_best canonicalization
 # ---------------------------------------------------------------------------
