@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from anomalydetection_spark.plans.suite import SuiteConfig, run_suite
+from anomalydetection_spark.sources import docstore as ds
 
 STATUS_DONE = "done"
 STATUS_PENDING = "pending"
@@ -497,8 +498,8 @@ class ResumableValidator:
 
         ``docs_loader``: optional bounded loader — called with a list of
         partition ids, returns a frame holding exactly those partitions'
-        rows, planned over ONLY the files that can hold them (the
-        docstore ``partition_in`` load option + the row-level filter).
+        rows, planned over ONLY the files that can hold them
+        (``docstore.load(where=…)`` + the row-level filter).
         When given (requires ``partition_ids``), the pending scan and the
         uniqueness rescan never read finished partitions' files at all —
         the Iceberg scan-planning contract: re-validating 1 of 10^5
@@ -539,13 +540,6 @@ class ResumableValidator:
         run_id = uuid.uuid4().hex[:12]
         if not todo:
             return {"run_id": run_id, "validated_partitions": [], "skipped_partitions": sorted(done)}
-        if docs_loader is not None and cfg.persist_exploded is not False:
-            # a loader-bounded pending set is the change an incremental
-            # pass re-validates: the sketch pass, the blooms probe and every
-            # constraint branch read it, so it crosses the source's reader
-            # once (a Python data source costs a worker round trip per
-            # scan), cached until the pass is written
-            pending_docs = pending_docs.persist()
 
         # sketch blobs run BEFORE the suite (one job, one scan of pending —
         # all four families at once) so the pending partitions' doc_id
@@ -647,8 +641,6 @@ class ResumableValidator:
                 if fs.exists(hpath):
                     fs.delete(hpath, True)
         res.unpersist()
-        if docs_loader is not None:
-            pending_docs.unpersist()
         rollup_rows = [
             {
                 **r.asDict(),
@@ -999,9 +991,6 @@ class ResumableValidator:
         the change (``changed_partitions`` → None), every done partition
         is invalidated: correct, never silently narrower.
         """
-        from anomalydetection_spark.sources import docstore as ds
-
-        ds.register(self.spark)
         # the MAIN head, not the newest manifest: staged branch commits
         # (write-audit-publish) must not advance the validation watermark
         # or enter the changed-set diff until they are published to main
@@ -1039,34 +1028,27 @@ class ResumableValidator:
                 if media_invalidated:
                     self.manifest.invalidate(media_invalidated)
             if media is None:
-                media = (
-                    self.spark.read.format("docstore")
-                    .option("path", media_table_dir)
-                    .load()
-                )
+                media = ds.load(self.spark, media_table_dir)
         if media is None:
             raise ValueError("media DataFrame or media_table_dir is required")
-        docs = self.spark.read.format("docstore").option("path", table_dir).load()
+        docs = ds.load(self.spark, table_dir)
         # partition enumeration + bounded loads from snapshot METADATA when
         # the table's layout permits (every file clustered to one partition
         # value): run() then plans the pending scan and the uniqueness
         # rescan over ONLY the files that can hold those partitions — a
         # re-validation of 1 of 10^5 partitions reads 1 partition's bytes.
-        # partition_in is plan-stable (fixed at load()), so the reused-frame
-        # pushdown-cache hazard that keeps pruned_scan opt-in does not
-        # apply; the row-level filter keeps correctness independent of the
-        # file bound (a partition-spanning legacy file only widens the read).
+        # The row-level filter keeps correctness independent of the file
+        # bound (a partition-spanning legacy file only widens the read).
         pvals = ds.partition_values(table_dir, partition_col)
 
         def _bounded(ids: list[int]) -> DataFrame:
-            rd = (
-                self.spark.read.format("docstore")
-                .option("path", table_dir)
-                .option("partition_in", ",".join(str(int(p)) for p in ids))
+            return scope_partition_filter(
+                ds.load(
+                    self.spark, table_dir, where={"partition_id": ids},
+                    journal=self.docstore_journal,
+                ),
+                ids,
             )
-            if self.docstore_journal:
-                rd = rd.option("journal", self.docstore_journal)
-            return scope_partition_filter(rd.load(), ids)
 
         summary = self.run(
             docs, media, baseline, cfg, with_sketches=with_sketches,
@@ -1105,16 +1087,12 @@ class ResumableValidator:
             return set()
 
         def _keys(version: int) -> DataFrame:
-            d = (
-                self.spark.read.format("docstore")
-                .option("path", table_dir)
-                .option("version", str(version))
-                # plan-stable file bound: only files that can hold the
-                # changed partitions are read (clustered files of other
-                # partitions never leave disk); the row-level filter
-                # below keeps spanning legacy files correct
-                .option("partition_in", ",".join(str(int(p)) for p in changed))
-                .load()
+            # file bound: only files that can hold the changed partitions
+            # are read (clustered files of other partitions never leave
+            # disk); the row-level filter keeps spanning legacy files correct
+            d = ds.load(
+                self.spark, table_dir, version=version,
+                where={"partition_id": changed},
             )
             return scope_partition_filter(d, changed).groupBy("doc_id").agg(
                 F.count("*").alias("n")
@@ -1169,10 +1147,7 @@ class ResumableValidator:
 
         def _keys(version: int) -> DataFrame:
             return (
-                self.spark.read.format("docstore")
-                .option("path", media_table_dir)
-                .option("version", str(version))
-                .load()
+                ds.load(self.spark, media_table_dir, version=version)
                 .select(media_key_col)
                 .distinct()
             )

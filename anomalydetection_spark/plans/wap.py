@@ -138,12 +138,7 @@ def write_audit_publish(
 
     # pin the VERSION, not the ref: the returned frames stay planable
     # after the branch is dropped (snapshots outlive refs until expiry)
-    docs = (
-        spark.read.format("docstore")
-        .option("path", table_dir)
-        .option("version", str(staged_v))
-        .load()
-    )
+    docs = ds.load(spark, table_dir, version=staged_v)
     audited = None  # None = full
     scoped = docs
     uniqueness_scope = None
@@ -151,21 +146,13 @@ def write_audit_publish(
         pids = ds.changed_partitions(table_dir, base_main, staged_v, partition_col)
         if pids is not None and len(pids) <= MAX_SCOPED_PARTITIONS:
             audited = sorted(pids)
-            rd = (
-                spark.read.format("docstore")
-                .option("path", table_dir)
-                .option("version", str(staged_v))
-            )
-            if partition_col == "partition_id":
-                # plan-stable file bound: the audit scan opens only the
-                # files that can hold the touched partitions (the
-                # partition_in option prunes on the always-tracked
-                # layout column); the row filter below stays the
-                # correctness boundary for spanning/legacy files
-                rd = rd.option(
-                    "partition_in", ",".join(str(int(p)) for p in audited)
-                )
-            scoped = rd.load().filter(F.col(partition_col).isin(audited))
+            # file bound: the audit scan opens only the files that can
+            # hold the touched partitions; the row filter stays the
+            # correctness boundary for spanning/legacy files
+            scoped = ds.load(
+                spark, table_dir, version=staged_v,
+                where={partition_col: audited},
+            ).filter(F.col(partition_col).isin(audited))
             # table-wide duplicate detection, BOUNDED: the naive scope
             # (the whole staged table) re-shuffles 10^12 doc_ids per
             # ingest inside duplicate_keys. A duplicate relevant to this

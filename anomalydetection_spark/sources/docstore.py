@@ -16,54 +16,46 @@ DataSourceV2 (PySpark's Python DataSource API — planned as a real V2
    against the new head (the Iceberg metadata-pointer CAS +
    CommitFailedException protocol; the ``version-hint`` file is a
    best-effort fast path that ``current_version`` probe-repairs);
-2. **manifest-driven scan planning** — `partitions()` plans one input
-   split per committed data file from the manifest, never from directory
-   listing (stale/abandoned files are invisible, exactly why Iceberg
-   scans survive concurrent writers);
-3. **file pruning from column stats** — the manifest records per-file
-   min/max for ``partition_id``; pushed filters (`pushFilters`) prune
-   whole files before any read, the Iceberg manifest-stats skip.
+2. **manifest-driven scan planning** — reads plan from the manifest,
+   never from directory listing (stale/abandoned files are invisible,
+   exactly why Iceberg scans survive concurrent writers);
+3. **file pruning from column stats** — one driver-side planner
+   (`plan_files`) drops the files whose manifest min/max stats,
+   bucket-transform stats or Bloom sidecars prove they hold none of the
+   wanted key values, the Iceberg manifest-stats skip.
 
-**Pruning is opt-in** (``.option("pruned_scan", "true")``), because Spark's
-Python-data-source pushdown caches mutable state per loaded relation:
-``PythonScanBuilder.pushFilters`` overwrites the provider-level read info
-(``PythonDataSourceV2.setReadInfo``), and a later **filterless** action on
-the same DataFrame reuses it via ``getOrCreateReadInfo`` — so a pruned
-partition list planned for ``df.filter(...)`` would silently drop rows
-from a subsequent ``df.count()``. With pruning off, planning is
-filter-independent and the cache reuse is harmless; with ``pruned_scan``
-on, the contract is one planned query per ``load()`` (exactly how a SQL
-engine resolves a table per statement). Filters left unsupported are
-re-applied by Spark post-scan, so correctness never depends on pruning.
+The engine reads a snapshot through `load`: it plans the files once on
+the driver and returns their visible rows (position and equality deletes
+applied, columns resolved by field id) as plain JVM parquet scans, so
+Spark's own parquet reader prunes columns and skips row groups from
+footer stats. ``where`` bounds which files are planned; it is not a row
+filter, and callers keep their row predicates. The Python reader behind
+``spark.read.format("docstore")`` plans through the same `plan_files`
+(its only bound is the ``partition_in`` option) and streams the same
+visible rows through Python workers; it implements no filter pushdown,
+so planning never depends on a query's filters.
 
-Everything inside a data file is plain parquet, written/read with
-pyarrow over Arrow record batches — no per-row Python on either path.
+Everything inside a data file is plain parquet, written with pyarrow over
+Arrow record batches — no per-row Python on the write or the read path.
 """
 
 from __future__ import annotations
 
+import bisect
 import functools
 import json
 import os
 import uuid
 import time
 from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamReader,
-    EqualNullSafe,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    LessThan,
-    LessThanOrEqual,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -95,9 +87,9 @@ def _stat_safe(v):
 # but NOT hash clustering: files bucketed by hash hold overlapping key
 # ranges, so a point lookup scans everything. The transform closes that:
 # the writer records, per file, min/max of `bucket(key) = pmod(hash(key),
-# n)` under a VIRTUAL stats column `__bucket_{col}_{n}`, and the reader
-# turns a pushed equality/IN on the source column into a membership test
-# on the virtual column — reusing the existing stats-pruning machinery,
+# n)` under a VIRTUAL stats column `__bucket_{col}_{n}`, and the planner
+# turns wanted values of the source column into a membership test on
+# the virtual column — reusing the existing stats-pruning machinery,
 # with no partition-spec registry (files written under different n, or
 # none, carry different virtual columns and prune independently — spec
 # evolution for free, same as layout evolution).
@@ -187,9 +179,9 @@ def _bucket_stat_key(col: str, n: int) -> str:
 # filter per (file, key column) — `bloom-{file}-{col}.bin` beside the data
 # file — and scan planning drops any candidate file whose Bloom proves
 # every wanted value absent (no false negatives, so pruning is always
-# safe; Spark re-applies the predicate post-scan regardless). Sidecars
-# load LAZILY: only when an equality/IN predicate names a Bloom'd column,
-# only for files that survived min/max + bucket pruning, cached process-
+# safe). Sidecars load LAZILY: only when planning wants values of a
+# Bloom'd column, only for files that survived min/max + bucket
+# pruning, cached process-
 # wide (immutable once committed). Maintenance owns them like data:
 # expire_snapshots deletes a dead file's sidecars with it, orphan sweep
 # collects unreferenced ones. Rewrites (compact/COW) drop sidecars on the
@@ -219,33 +211,99 @@ def _bloom_sidecar(table_dir: str, name: str) -> bytes | None:
     return blob
 
 
-def _point_predicates(bounds: dict, in_sets: dict) -> dict[str, set]:
-    """{col: wanted values} for every pushed equality/IN — the predicate
-    shape bucket stats and Bloom sidecars can serve."""
-    probes: dict[str, set] = {}
-    for col, s in in_sets.items():
-        if not col.startswith("__bucket_"):
-            probes[col] = set(s)
-    for col, (lo, hi) in bounds.items():
-        if lo is not None and lo == hi and not isinstance(lo, float):
-            if col not in probes:
-                probes[col] = {lo}
-    return probes
+def _may_hold(st, vals: list) -> bool:
+    """False only when a file's ``[min, max]`` stat provably holds none of
+    the sorted ``vals``. Missing and float stats (NaN-blind, while Spark
+    orders NaN above every double) and incomparable types never prune."""
+    if not st or st[0] is None or isinstance(st[0], float) or isinstance(st[1], float):
+        return True
+    try:
+        i = bisect.bisect_left(vals, st[0])
+        return i < len(vals) and vals[i] <= st[1]
+    except TypeError:
+        return True
 
 
-def _bucket_specs_in(files: list[dict]) -> dict[str, set[int]]:
-    """{source_col: {n, ...}} for every virtual bucket stats column any
-    file carries — multiple n values coexist under spec evolution."""
-    specs: dict[str, set[int]] = {}
-    for f in files:
-        for k in (f.get("stats") or {}):
-            if not k.startswith("__bucket_"):
-                continue
-            body = k[len("__bucket_"):]
-            col, _, num = body.rpartition("_")
-            if col and num.isdigit():
-                specs.setdefault(col, set()).add(int(num))
-    return specs
+def _may_overlap(st, lo, hi) -> bool:
+    """False only when a file's ``[min, max]`` stat provably misses the
+    interval ``[lo, hi]`` (same safety rules as `_may_hold`)."""
+    if lo is None or not st or st[0] is None or isinstance(st[0], float) or isinstance(st[1], float):
+        return True
+    try:
+        return not (st[1] < lo or st[0] > hi)
+    except TypeError:
+        return True
+
+
+def plan_files(table_dir: str, manifest: dict, where: dict | None = None) -> list[dict]:
+    """The manifest entries that can hold a row whose every ``where``
+    column equals one of its wanted values — the one file-pruning planner
+    (`load`, the ``format("docstore")`` reader and `merge_into`'s probe).
+    Three tiers, cheapest first: min/max stats, bucket-transform stats
+    (hash-clustered layouts) and Bloom sidecars (unclustered layouts,
+    loaded only for files the first two tiers keep). Each file's stats
+    are looked up through its field-id map, so a renamed column prunes on
+    its own bytes' stats. A column whose values include None never prunes;
+    an empty value list keeps no file."""
+    files = manifest["files"]
+    wanted: dict[str, list] = {}
+    for col, vals in (where or {}).items():
+        vals = list(vals)
+        if any(v is None for v in vals):
+            continue
+        try:
+            wanted[col] = sorted(set(vals))
+        except TypeError:
+            continue  # mixed types: no pruning on this column
+    if not wanted:
+        return list(files)
+    if not all(wanted.values()):
+        return []
+    fids = manifest.get("field_ids") or {}
+    bucket_cache: dict[tuple, list | None] = {}
+    hash_cache: dict[str, object] = {}
+
+    def _buckets(col: str, n: int):
+        if (col, n) not in bucket_cache:
+            try:
+                bucket_cache[col, n] = sorted(set(_bucket_of(wanted[col], n)))
+            except TypeError:
+                bucket_cache[col, n] = None  # non-int/str values
+        return bucket_cache[col, n]
+
+    def _hashes(col: str):
+        if col not in hash_cache:
+            try:
+                hash_cache[col] = bloomops.key_hashes(wanted[col])
+            except TypeError:
+                hash_cache[col] = None
+        return hash_cache[col]
+
+    def _keep(f: dict) -> bool:
+        stats = f.get("stats") or {}
+        nm = f.get("name_map") or {}
+        for col, vals in wanted.items():
+            src = _mapped_source(col, fids, nm)
+            if src is None:
+                continue  # the file never held the column: nothing to prune on
+            if not _may_hold(stats.get(src), vals):
+                return False
+            pref = f"__bucket_{src}_"
+            for k, st in stats.items():
+                num = k[len(pref):]
+                if k.startswith(pref) and num.isdigit():
+                    bks = _buckets(col, int(num))
+                    if bks is not None and not _may_hold(st, bks):
+                        return False
+            sname = (f.get("blooms") or {}).get(src)
+            if sname:
+                blob = _bloom_sidecar(table_dir, sname)
+                h = _hashes(col)
+                if blob is not None and h is not None and not bloomops.may_contain_any(blob, h):
+                    return False
+        return True
+
+    return [f for f in files if _keep(f)]
 
 
 # ---------------------------------------------------------------------------
@@ -576,56 +634,6 @@ class _FileSplit(InputPartition):
     # only eq files whose sequence is newer than the data file's; rows
     # whose key value appears in an eq file are skipped while streaming
     eq_deletes: tuple = ()
-    # pushed predicate bounds for ROW-GROUP pruning inside this file
-    # (parquet footer statistics — the second pruning tier below the
-    # manifest's file-level stats): ((current_col, lo, hi), ...) and
-    # ((current_col, (v, ...)), ...). Advisory only: Spark re-applies
-    # every filter post-scan, so a kept group never breaks correctness.
-    bounds: tuple = ()
-    in_sets: tuple = ()
-
-
-def _rg_pruned(rg_meta, col_idx: dict, bounds, in_sets) -> bool:
-    """True when one row group's parquet footer statistics prove no row
-    can match the pushed predicates — the in-file tier of the same
-    pruning the manifest does per file (_file_pruned). Identical safety
-    discipline: columns without usable stats never prune, float stats
-    never prune (parquet min/max is NaN-blind while Spark orders NaN
-    above every double), and any cross-type comparison surprise keeps
-    the group rather than risking it. Parquet string stats may be
-    TRUNCATED bounds, but truncation preserves the bound property
-    (min ≤ all values ≤ max), which is all pruning needs."""
-
-    def _mm(col):
-        j = col_idx.get(col)
-        if j is None:
-            return None, None
-        st = rg_meta.column(j).statistics
-        if st is None or not st.has_min_max:
-            return None, None
-        rmin, rmax = st.min, st.max
-        if rmin is None or isinstance(rmin, float) or isinstance(rmax, float):
-            return None, None
-        return rmin, rmax
-
-    try:
-        for col, lo, hi in bounds:
-            rmin, rmax = _mm(col)
-            if rmin is None:
-                continue
-            if lo is not None and rmax < lo:
-                return True
-            if hi is not None and rmin > hi:
-                return True
-        for col, vals in in_sets:
-            rmin, rmax = _mm(col)
-            if rmin is None:
-                continue
-            if not any(rmin <= v <= rmax for v in vals):
-                return True
-    except TypeError:
-        return False  # incomparable stat/value types: never prune
-    return False
 
 
 def _mapped_source(
@@ -673,24 +681,24 @@ def _eq_value_filter(batch, src: str, values):
 
 
 class DocStoreReader(DataSourceReader):
+    """The ``spark.read.format("docstore")`` reader: one input split per
+    planned file, visible rows streamed through Python workers. Engine
+    reads go through `load` instead, which returns the same rows from JVM
+    parquet scans."""
+
     def __init__(self, options: dict, schema: StructType) -> None:
         self.table_dir = options["path"]
         # optional side-channel recording which files were actually opened
         # (the pruning-evidence hook for tests; no-op unless set)
         self.journal_dir = options.get("journal") or None
-        self.pruned_scan = str(options.get("pruned_scan", "")).lower() == "true"
-        # load-time partition bound (CSV of partition_id values): unlike
-        # pushFilters state, this is fixed at load() and therefore PLAN-
-        # STABLE — every action on the returned DataFrame sees the same
-        # file list, so it is safe on reused frames where ``pruned_scan``
-        # is not (the pushdown-cache hazard in the module docstring).
-        # It is an Iceberg scan-planning bound, NOT a row filter: files
-        # whose partition_id stats intersect the set are read whole, and
-        # callers who need exact rows still apply the row-level predicate
-        # (correctness never depends on the option).
+        # load-time partition bound (CSV of partition_id values), fixed at
+        # load() and therefore plan-stable: an Iceberg scan-planning
+        # bound, NOT a row filter — files whose partition_id stats
+        # intersect the set are read whole, and callers who need exact
+        # rows still apply the row-level predicate
         pin = options.get("partition_in")
-        self.part_in: set[int] | None = (
-            {int(x) for x in str(pin).split(",") if x.strip() != ""}
+        self.part_in: list[int] | None = (
+            [int(x) for x in str(pin).split(",") if x.strip() != ""]
             if pin is not None
             else None
         )
@@ -700,121 +708,9 @@ class DocStoreReader(DataSourceReader):
             int(v) if v is not None else None,
             ref=options.get("ref") or options.get("branch"),
         )
-        self._bounds: dict[str, tuple] = {}
-        self._in_sets: dict[str, set] = {}
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """Accept range/equality/in filters on ANY column the manifest
-        carries min/max stats for (every primitive column since the
-        multi-column stats writer; legacy manifests carry only
-        ``partition_id``); everything else is returned as unsupported
-        (Spark re-applies it post-scan, so pruning is an optimization,
-        never a correctness dependency). Per-column stats are what let a
-        table's layout EVOLVE: files clustered by the old layout column
-        keep pruning on it while files from the new layout prune on
-        theirs — no partition-spec registry needed.
-
-        State discipline: accumulators reset here (pushFilters opens a
-        plan) and are consumed by partitions(). EVERY filter is returned
-        as unsupported — pruning is file-granular (manifest min/max), so a
-        kept file may still hold non-matching rows and Spark must re-apply
-        the predicate post-scan; the filters only STEER the file pruning,
-        and only under ``pruned_scan`` (see the module docstring: Spark
-        caches pushed-down read info per relation, so filter-dependent
-        planning is only safe when one query is planned per load())."""
-        self._bounds = {}
-        self._in_sets = {}
-        if not self.pruned_scan:
-            return iter(filters)
-        for flt in filters:
-            attr = getattr(flt, "attribute", None)  # e.g. Not has none
-            col = attr[0] if attr is not None and len(attr) == 1 else None
-            if col is None:
-                continue
-            if isinstance(flt, (EqualTo, EqualNullSafe, GreaterThan,
-                                GreaterThanOrEqual, LessThan, LessThanOrEqual)) \
-                    and flt.value is None:
-                # a null-safe equality to NULL is an IS NULL predicate, not
-                # a value-range constraint — folding None into lo/hi would
-                # TypeError in max()/min() and conflate the semantics;
-                # Spark applies it post-scan like any unsupported filter
-                continue
-            lo, hi = self._bounds.get(col, (None, None))
-            if isinstance(flt, (EqualTo, EqualNullSafe)):
-                lo = flt.value if lo is None else max(lo, flt.value)
-                hi = flt.value if hi is None else min(hi, flt.value)
-            elif isinstance(flt, (GreaterThan, GreaterThanOrEqual)):
-                lo = flt.value if lo is None else max(lo, flt.value)
-            elif isinstance(flt, (LessThan, LessThanOrEqual)):
-                hi = flt.value if hi is None else min(hi, flt.value)
-            elif isinstance(flt, In):
-                # the In dataclass carries its array in `value` (a tuple),
-                # unlike the JVM v2 filter's values()
-                s = {v for v in flt.value if v is not None}
-                if not s:
-                    continue
-                prev = self._in_sets.get(col)
-                self._in_sets[col] = s if prev is None else (prev & s)
-            self._bounds[col] = (lo, hi)
-        return iter(filters)  # all unsupported: Spark re-applies post-scan
-
-    @staticmethod
-    def _file_pruned(stats: dict, bounds: dict, in_sets: dict) -> bool:
-        """True when the file's per-column min/max proves NO row can match.
-        Columns without recorded stats never prune (safe default); value
-        comparisons happen within the column's own type."""
-        for col, (lo, hi) in bounds.items():
-            fmin, fmax = stats.get(col, (None, None))
-            if fmin is None or isinstance(fmin, float) or isinstance(fmax, float):
-                continue  # no stats, or NaN-blind legacy float stats
-            if lo is not None and fmax < lo:
-                return True
-            if hi is not None and fmin > hi:
-                return True
-        for col, s in in_sets.items():
-            fmin, fmax = stats.get(col, (None, None))
-            if fmin is None or isinstance(fmin, float) or isinstance(fmax, float):
-                continue
-            if not any(fmin <= v <= fmax for v in s):
-                return True
-        return False
 
     def partitions(self) -> Sequence[InputPartition]:
-        bounds, self._bounds = self._bounds, {}
-        in_sets, self._in_sets = self._in_sets, {}  # consumed: next scan clean
-        if self.part_in is not None:
-            # the load-time partition bound joins the pruning predicates —
-            # file tier here, row-group tier via the split's in_sets
-            prev = in_sets.get(STATS_COLUMN)
-            in_sets[STATS_COLUMN] = (
-                self.part_in if prev is None else prev & self.part_in
-            )
-        # point-predicate stats tiers: a pushed equality/IN on a source
-        # column prunes via (a) bucket-transform virtual stats — the shape
-        # order-based min/max can NOT serve under hash clustering — and
-        # (b) per-file Bloom sidecars for UNclustered layouts. Multiple
-        # bucket n (spec evolution) prune independently; files lacking
-        # either stat are untouched (kept unless other stats prune them).
-        probes = _point_predicates(bounds, in_sets)
-        for col, ns in _bucket_specs_in(self.manifest["files"]).items():
-            vals = probes.get(col)
-            if not vals:
-                continue
-            for n in ns:
-                try:
-                    bks = set(_bucket_of(vals, n))
-                except TypeError:
-                    continue  # non-int/str key values: no bucket pruning
-                vkey = _bucket_stat_key(col, n)
-                prev = in_sets.get(vkey)
-                in_sets[vkey] = bks if prev is None else prev & bks
-        probe_h: dict[str, tuple] = {}
-        if probes and any(f.get("blooms") for f in self.manifest["files"]):
-            for col, vals in probes.items():
-                try:
-                    probe_h[col] = bloomops.key_hashes(list(vals))
-                except TypeError:
-                    pass  # non-int/str values: no Bloom pruning
+        where = {STATS_COLUMN: self.part_in} if self.part_in is not None else None
         eq_resolved = [
             (
                 os.path.join(self.table_dir, e["path"]),
@@ -823,28 +719,8 @@ class DocStoreReader(DataSourceReader):
             )
             for e in (self.manifest.get("eq_deletes") or [])
         ]
-        # predicates survive into the splits so each task can prune ROW
-        # GROUPS from its file's parquet footer — the tier below manifest
-        # stats: a kept file's non-matching groups never leave disk
-        split_bounds = tuple((c, lo, hi) for c, (lo, hi) in bounds.items())
-        split_in = tuple((c, tuple(s)) for c, s in in_sets.items())
         splits = []
-        for f in self.manifest["files"]:
-            if self._file_pruned(f["stats"], bounds, in_sets):
-                continue
-            if probe_h:
-                bl = f.get("blooms") or {}
-                pruned = False
-                for col, h in probe_h.items():
-                    sname = bl.get(col)
-                    blob = (
-                        _bloom_sidecar(self.table_dir, sname) if sname else None
-                    )
-                    if blob is not None and not bloomops.may_contain_any(blob, h):
-                        pruned = True
-                        break
-                if pruned:
-                    continue
+        for f in plan_files(self.table_dir, self.manifest, where):
             fseq = int(f.get("seq", 0))
             splits.append(
                 _FileSplit(
@@ -859,23 +735,10 @@ class DocStoreReader(DataSourceReader):
                         (p, c) for p, c, s in eq_resolved
                         if c is not None and s > fseq
                     ),
-                    split_bounds,
-                    split_in,
                 )
             )
         # empty-scan guard: Spark requires >= 1 partition
         return splits or [_FileSplit("", None)]
-
-    @staticmethod
-    def _file_batches(pf, kept: list[int], rg_start: list[int]):
-        """(batch, absolute_start_row) over the kept row groups — one
-        iter_batches call per group so each batch knows its file-absolute
-        position regardless of which groups pruning skipped."""
-        for rg in kept:
-            offset = rg_start[rg]
-            for batch in pf.iter_batches(row_groups=[rg]):
-                yield batch, offset
-                offset += batch.num_rows
 
     def read(self, part: _FileSplit):  # -> Iterator[pa.RecordBatch]
         import pyarrow as pa
@@ -893,10 +756,10 @@ class DocStoreReader(DataSourceReader):
             ).close()
         pf = pq.ParquetFile(part.path)
         expected = self._arrow_schema()
+        nm = dict(part.name_map)
+        fids = self.manifest.get("field_ids") or {}
         srcs: list[str | None] = []
         if expected is not None:
-            nm = dict(part.name_map)
-            fids = self.manifest.get("field_ids") or {}
             srcs = [_mapped_source(f.name, fids, nm) for f in expected]
         import numpy as np
 
@@ -918,61 +781,18 @@ class DocStoreReader(DataSourceReader):
         # key column is resolved through THIS file's id map, so renames
         # never detach a delete
         eq_sets: list[tuple[str, set]] = []
-        nm_eq = dict(part.name_map)
-        fids_eq = self.manifest.get("field_ids") or {}
         for epath, cur in part.eq_deletes:
-            src = _mapped_source(cur, fids_eq, nm_eq)
+            src = _mapped_source(cur, fids, nm)
             if src is None:
                 continue
             vals = set(pq.read_table(epath).column(0).to_pylist())
             vals.discard(None)
             if vals:
                 eq_sets.append((src, vals))
-        md = pf.metadata
-        n_rg = md.num_row_groups
-        kept = list(range(n_rg))
-        if (part.bounds or part.in_sets) and n_rg > 0:
-            # map pushed CURRENT-schema columns to this file's physical
-            # names through its id map (rename-safe, like column reads);
-            # unmapped columns simply don't prune
-            pb = [
-                (src, lo, hi)
-                for col, lo, hi in part.bounds
-                if (src := _mapped_source(col, fids_eq, nm_eq)) is not None
-            ]
-            pi = [
-                (src, vals)
-                for col, vals in part.in_sets
-                if (src := _mapped_source(col, fids_eq, nm_eq)) is not None
-            ]
-            if (pb or pi) and n_rg > 0:
-                rg0 = md.row_group(0)
-                col_idx = {
-                    rg0.column(j).path_in_schema: j
-                    for j in range(rg0.num_columns)
-                }
-                kept = [
-                    i
-                    for i in range(n_rg)
-                    if not _rg_pruned(md.row_group(i), col_idx, pb, pi)
-                ]
-        if part.journal_dir:
-            open(
-                os.path.join(
-                    part.journal_dir,
-                    f"rg-{os.path.basename(part.path)}-{len(kept)}-of-{n_rg}",
-                ),
-                "w",
-            ).close()
-        # per-group starting row index: position deletes address rows by
-        # absolute index within the FILE, so skipped groups must not shift
-        # the offsets of the groups that remain
-        rg_start = []
-        acc = 0
-        for i in range(n_rg):
-            rg_start.append(acc)
-            acc += md.row_group(i).num_rows
-        for batch, start in self._file_batches(pf, kept, rg_start):
+        # position deletes address rows by absolute index within the file
+        offset = 0
+        for batch in pf.iter_batches():
+            start, offset = offset, offset + batch.num_rows
             if dropped is not None and dropped.size:
                 # position-delete bitmap for this batch's span, applied
                 # vectorized: binary-search each absolute row index into
@@ -1619,10 +1439,7 @@ class DocStoreDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent registration of the docstore format on this session.
-    Filter pushdown to Python data sources is opt-in; without it Spark
-    refuses to plan a reader that implements pushFilters."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """Idempotent registration of the docstore format on this session."""
     spark.dataSource.register(DocStoreDataSource)
 
 
@@ -1981,7 +1798,7 @@ def compact_snapshot(
     (operators/layout.cluster_by_zorder) so per-file min/max stats are
     tight on EVERY named dimension — compaction and scan-skipping
     clustering in one pass."""
-    df = spark.read.format("docstore").option("path", table_dir).load()
+    df = load(spark, table_dir)
     if zorder_by:
         from pyspark.sql import functions as F
 
@@ -2059,6 +1876,18 @@ def _file_pathkey_col():
     return F.regexp_replace(decoded, r"^/+", "/")
 
 
+def _float_guard(col, dtype):
+    """A float column as an expression Spark cannot push into the parquet
+    reader: pyarrow writes NaN-blind footer min/max (a file holding 1.5
+    and NaN records max 1.5), while Spark orders NaN above every double,
+    so a pushed ``x > 5.0`` would skip row groups whose NaN rows match.
+    ``nanvl(x, x)`` is ``x`` for every value, NULL and NaN included."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType, FloatType
+
+    return F.nanvl(col, col) if isinstance(dtype, (DoubleType, FloatType)) else col
+
+
 def _read_files_visible(
     spark,
     table_dir: str,
@@ -2085,18 +1914,23 @@ def _read_files_visible(
     files of the visible entries are read as ONE executor-side parquet
     scan, each delete row is mapped to its data file through a
     delete-count-sized broadcast of (delete basename → data basename)
-    pairs, and the visible frame anti-joins on (file basename, pos). The
-    round-4 shape — driver-side ``to_pylist`` of every delete file
-    OR-chained into ``isin`` literals — made every COW rewrite, merge
-    probe, changelog and compaction plan O(total deleted positions) in
-    literals plus a driver materialization; a 100-TB table with heavy MOR
-    churn has millions of deleted positions, while the pair table here
-    stays O(delete files) and the positions never leave the executors."""
+    pairs, and the visible frame anti-joins on (file path, pos): the
+    pair table stays O(delete files) and the positions never leave the
+    executors. Equality deletes (``apply_eq``) add one sequence-scoped
+    anti-join per key column (`_eq_delete_join`). An empty ``entries``
+    list reads as an empty frame with the snapshot's schema."""
     from pyspark.sql import functions as F
 
     m = manifest or load_manifest(table_dir)
     schema = StructType.fromJson(json.loads(m["schema"]))
     fids = m.get("field_ids") or {}
+    if not entries:  # no file planned: the snapshot's schema, no rows
+        out = spark.createDataFrame([], schema)
+        if with_file_col:
+            out = out.withColumn("_file", F.lit(None).cast("string")).withColumn(
+                "_pos", F.lit(None).cast("long")
+            )
+        return out
 
     def _mapping(e: dict) -> tuple:
         nm = e.get("name_map") or {}
@@ -2115,7 +1949,7 @@ def _read_files_visible(
         )
         have = set(df.columns)
         cols = [
-            F.col(src).alias(name)
+            _float_guard(F.col(src), schema[name].dataType).alias(name)
             if src is not None and src in have
             else F.lit(None).cast(schema[name].dataType).alias(name)
             for name, src in mp
@@ -2127,15 +1961,16 @@ def _read_files_visible(
     # position deletes: one distributed scan over every delete file, a
     # broadcast (delete basename → data file) pair table, one two-column
     # anti-join — no position ever collects to the driver and no In
-    # literal ever enters the plan (round-4 verdict weak #2). Data files
-    # key by CANONICAL ABSOLUTE PATH, not basename: add_files imports
-    # carry absolute paths whose basenames may collide across source
-    # dirs (the _split_affected rule)
+    # literal ever enters the plan. Data files key by CANONICAL ABSOLUTE
+    # PATH, not basename: add_files imports carry absolute paths whose
+    # basenames may collide across source dirs (the _split_affected rule)
     del_pairs = [
         (os.path.basename(d), _entry_abspath(table_dir, e))
         for e in entries
         for d in e.get("deletes", ())
     ]
+    if del_pairs or (apply_eq and m.get("eq_deletes")):
+        out = out.withColumn("_pkey", _file_pathkey_col())
     if del_pairs:
         map_df = spark.createDataFrame(del_pairs, "_dbase string, _pkey string")
         del_df = (
@@ -2149,47 +1984,104 @@ def _read_files_visible(
             .join(F.broadcast(map_df), "_dbase")
             .select("_pkey", F.col("pos").alias("_pos"))
         )
-        out = (
-            out.withColumn("_pkey", _file_pathkey_col())
-            .join(del_df, ["_pkey", "_pos"], "left_anti")
-            .drop("_pkey")
-        )
-    eqs = [e for e in (m.get("eq_deletes") or []) if _eq_current_col(m, e)]
-    if eqs and apply_eq:
-        # equality deletes, sequence-scoped: join each file's seq in via
-        # its canonical absolute path — a file-count-sized broadcast —
-        # then one anti join per eq file on (key match AND file predates
-        # delete). Rewrites MUST read through this: raw files would
-        # resurrect eq-deleted rows into the rewritten snapshot. Path
-        # keying (not basename) keeps the seq bound to add_files imports
-        # too — a NULL _fseq from a failed match would nullify the
-        # predicate and resurrect their eq-deleted rows.
-        base_df = spark.createDataFrame(
-            [
-                (_entry_abspath(table_dir, e), int(e.get("seq", 0)))
-                for e in entries
-            ],
-            "_pkey string, _fseq int",
-        )
-        out = (
-            out.withColumn("_pkey", _file_pathkey_col())
-            .join(F.broadcast(base_df), "_pkey", "left")
-            .drop("_pkey")
-        )
-        for e in eqs:
-            cur = _eq_current_col(m, e)
-            n_keys, _ = _footer_stats(os.path.join(table_dir, e["path"]))
-            kdf = spark.read.parquet(os.path.join(table_dir, e["path"])).toDF("_eqk")
-            if n_keys <= 5_000_000:  # executor-memory-sized → broadcast
-                kdf = F.broadcast(kdf)
-            out = out.join(
-                kdf,
-                (F.col(cur) == F.col("_eqk"))
-                & (F.col("_fseq") < F.lit(int(e.get("seq", 0)))),
-                "left_anti",
-            )
-        out = out.drop("_fseq")
+        out = out.join(del_df, ["_pkey", "_pos"], "left_anti")
+    if apply_eq:
+        # rewrites MUST read through this: raw files would resurrect
+        # eq-deleted rows into the rewritten snapshot
+        out = _eq_delete_join(spark, table_dir, m, entries, out, "left_anti") or out
+    out = out.drop("_pkey")
     return out if with_file_col else out.drop("_file", "_pos")
+
+
+def _eq_delete_join(spark, table_dir: str, m: dict, entries: list[dict], vis, how: str):
+    """``vis`` (visible rows of ``entries`` carrying ``_pkey``) joined
+    against the snapshot's bound equality deletes: ONE sequence-scoped
+    join per key column, however many eq commits wrote that column's
+    keys. Each row picks up its data file's sequence through a
+    file-count-sized broadcast keyed by canonical absolute path (so
+    add_files imports bind too); a column's eq files are read as one
+    parquet scan per physical key name (renames) whose rows pick up their
+    file's sequence through a broadcast (eq file → seq) pair table; and a
+    row is deleted when some key equals its value and its file predates
+    that key's delete. ``how='left_anti'`` keeps the rows no eq delete
+    removes (reads); ``'left_semi'`` returns the rows some eq delete
+    removes, unioned over key columns (the fold). None when no eq delete
+    binds."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    by_col: dict[str, list[dict]] = {}
+    for e in m.get("eq_deletes") or []:
+        cur = _eq_current_col(m, e)
+        if cur:
+            by_col.setdefault(cur, []).append(e)
+    if not by_col:
+        return None
+    file_seq = spark.createDataFrame(
+        [(_entry_abspath(table_dir, e), int(e.get("seq", 0))) for e in entries],
+        "_pkey string, _fseq int",
+    )
+    vis = vis.join(F.broadcast(file_seq), "_pkey", "left")
+    hits = None
+    for cur, es in by_col.items():
+        keys = None
+        for phys in sorted({e["col"] for e in es}):
+            k = spark.read.parquet(
+                *[os.path.join(table_dir, e["path"]) for e in es if e["col"] == phys]
+            ).select(
+                F.col(phys).alias("_eqk"),
+                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("_eqname"),
+            )
+            keys = k if keys is None else keys.unionByName(k)
+        eq_seq = spark.createDataFrame(
+            [(os.path.basename(e["path"]), int(e["seq"])) for e in es],
+            "_eqname string, _eqseq int",
+        )
+        keys = keys.join(F.broadcast(eq_seq), "_eqname").drop("_eqname")
+        n_keys = sum(
+            pq.read_metadata(os.path.join(table_dir, e["path"])).num_rows for e in es
+        )
+        if n_keys <= 5_000_000:  # executor-memory-sized → broadcast
+            keys = F.broadcast(keys)
+        cond = (F.col(cur) == F.col("_eqk")) & (F.col("_fseq") < F.col("_eqseq"))
+        if how == "left_anti":
+            vis = vis.join(keys, cond, how)
+        else:
+            hit = vis.join(keys, cond, how)
+            hits = hit if hits is None else hits.unionByName(hit)
+    return (vis if how == "left_anti" else hits).drop("_fseq")
+
+
+def load(
+    spark,
+    table_dir: str,
+    *,
+    version: int | None = None,
+    ref: str | None = None,
+    where: dict | None = None,
+    journal: str | None = None,
+):
+    """The engine's batch read of a docstore snapshot (``version``, named
+    ``ref``, or the main head): the manifest loads once, `plan_files`
+    keeps the files that can hold ``where``'s values, and the kept files'
+    visible rows come back from JVM parquet scans (`_read_files_visible`).
+
+    ``where`` is ``{column: values}`` (point or IN). It bounds which
+    files are PLANNED, not which rows come back: a kept file is read
+    whole, so callers apply their own row filter. The plan is fixed here,
+    so every action on the returned frame reads the same files.
+    ``journal``: a directory that receives an ``opened-<file>`` marker
+    per planned file (scan-bounding evidence for tests)."""
+    m = load_manifest(
+        table_dir, int(version) if version is not None else None, ref=ref
+    )
+    kept = plan_files(table_dir, m, where)
+    if journal:
+        for f in kept:
+            open(
+                os.path.join(journal, f"opened-{os.path.basename(f['path'])}"), "w"
+            ).close()
+    return _read_files_visible(spark, table_dir, kept, m)
 
 
 def _retry_on_conflict(fn):
@@ -2578,104 +2470,28 @@ def merge_into(
     jkeys = F.broadcast(ukeys) if hint_broadcast else ukeys
     plans: dict[str, str] = {}
     probe = []
-    # probe-candidate pruning from manifest key stats (the Iceberg MERGE
-    # planning skip): a file whose key_col min/max provably excludes every
-    # update key cannot be rewritten — drop it from the probe scan before
-    # any read. Small key sets prune per-key (one bounded driver collect,
-    # used ONLY for pruning — the joins below still never see a literal);
-    # large ones prune on the keys' [min,max] envelope (2-value agg).
-    # Stat-less/float stats or incomparable types keep the file (sound).
-    probe_entries = list(manifest["files"])
-    if probe_entries:
-        if n_keys <= 10_000:
-            import bisect
-
-            kvals = sorted(
-                r[key_col] for r in ukeys.collect() if r[key_col] is not None
-            )
-
-            def _may(st) -> bool:
-                if not st or st[0] is None or isinstance(st[0], float):
-                    return True
-                try:
-                    i = bisect.bisect_left(kvals, st[0])
-                except TypeError:
-                    return True
-                return i < len(kvals) and kvals[i] <= st[1]
-
-        elif n_keys:
-            row = ukeys.agg(
-                F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
-            ).first()
-            klo, khi = row["lo"], row["hi"]
-
-            def _may(st) -> bool:
-                if not st or st[0] is None or isinstance(st[0], float) or klo is None:
-                    return True
-                try:
-                    return not (st[1] < klo or st[0] > khi)
-                except TypeError:
-                    return True
-
-        else:
-
-            def _may(st) -> bool:
-                return False  # zero non-null keys match nothing
-
+    # probe-candidate pruning (the Iceberg MERGE planning skip): a file
+    # that provably holds no update key cannot be rewritten, so it never
+    # enters the probe scan. Up to 10,000 keys go through plan_files (one
+    # bounded driver collect, used ONLY for planning — the joins below
+    # never see a literal); larger sets prune on the keys' [min, max]
+    # envelope (a 2-value agg) against each file's key stats.
+    if n_keys <= 10_000:
+        kvals = [r[key_col] for r in ukeys.collect() if r[key_col] is not None]
+        probe_entries = plan_files(table_dir, manifest, {key_col: kvals})
+    else:
+        row = ukeys.agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi")).first()
+        fids = manifest.get("field_ids") or {}
         probe_entries = [
-            f for f in probe_entries if _may((f.get("stats") or {}).get(key_col))
+            f for f in manifest["files"]
+            if _may_overlap(
+                (f.get("stats") or {}).get(
+                    _mapped_source(key_col, fids, f.get("name_map") or {})
+                ),
+                row["lo"],
+                row["hi"],
+            )
         ]
-        # second tier, orthogonal to key ranges: bucket-transform stats.
-        # On a hash-clustered table key min/max overlap everywhere, but a
-        # small update set hits few buckets — a file whose recorded
-        # __bucket_{key}_{n} interval misses every update-key bucket can
-        # be dropped. Large key sets skip this (they cover ~all buckets).
-        if 0 < n_keys <= 10_000:
-            import bisect as _bisect
-
-            bcache: dict[int, list[int]] = {}
-
-            def _bks(n: int) -> list[int]:
-                if n not in bcache:
-                    try:
-                        bcache[n] = sorted(set(_bucket_of(kvals, n)))
-                    except TypeError:
-                        bcache[n] = list(range(n))  # unbucketable: keep all
-                return bcache[n]
-
-            def _bucket_may(stats: dict) -> bool:
-                pref = f"__bucket_{key_col}_"
-                for k, st in stats.items():
-                    if not (k.startswith(pref) and st and st[0] is not None):
-                        continue
-                    num = k.rpartition("_")[2]
-                    if not num.isdigit():
-                        continue
-                    bks = _bks(int(num))
-                    i = _bisect.bisect_left(bks, st[0])
-                    if not (i < len(bks) and bks[i] <= st[1]):
-                        return False
-                return True
-
-            probe_entries = [
-                f for f in probe_entries if _bucket_may(f.get("stats") or {})
-            ]
-            # third tier: Bloom sidecars (unclustered layouts) — a file
-            # whose key Bloom proves every update key absent can't rewrite
-            try:
-                kh = bloomops.key_hashes(list(kvals))
-            except TypeError:
-                kh = None
-            if kh is not None and len(kh):
-
-                def _bloom_may(f: dict) -> bool:
-                    sname = (f.get("blooms") or {}).get(key_col)
-                    blob = (
-                        _bloom_sidecar(table_dir, sname) if sname else None
-                    )
-                    return blob is None or bloomops.may_contain_any(blob, kh)
-
-                probe_entries = [f for f in probe_entries if _bloom_may(f)]
     if probe_entries:
         probe_df = (
             _read_files_visible(
@@ -2899,9 +2715,10 @@ def delete_where_eq(spark, table_dir: str, key_col: str, keys) -> dict:
 
     ``keys``: a DataFrame bearing ``key_col`` (written out distributed —
     the driver never holds the key set) or a small python iterable.
-    Readers load each applicable delete file into a per-task hash set
-    (Iceberg's own execution model); compact_snapshot folds eq deletes
-    into a rewrite, after which the fresh snapshot carries none."""
+    `load` applies them as one sequence-scoped anti-join per key column
+    (`_eq_delete_join`), the Python reader as per-task hash sets;
+    compact_snapshot folds eq deletes into a rewrite, after which the
+    fresh snapshot carries none."""
     import shutil
 
     from pyspark.sql import DataFrame as _DF
@@ -2963,28 +2780,25 @@ def rewrite_eq_deletes(spark, table_dir: str) -> dict:
     ``rewrite_position_delete_files`` maintenance analog, without
     rewriting any data file.
 
-    Why: every eq-delete commit adds one sequence-scoped anti-join to the
-    rewrite/probe read path and one per-task hash set to the batch
-    reader, so plans grow O(eq commits) until maintenance runs (round-4
-    verdict minor 3a). Position deletes have no such growth: after the
-    fold, ALL delete files apply through the reader's single vectorized
-    position mask / one distributed anti-join, regardless of how many
-    delete commits produced them, and the snapshot's ``eq_deletes`` list
-    is empty.
+    Why: every read of a snapshot with eq deletes pays one
+    sequence-scoped anti-join per key column over every eq file's keys,
+    and the batch reader one per-task hash set per eq file, until
+    maintenance runs. Position deletes apply through one distributed
+    anti-join (or the reader's vectorized position mask) regardless of
+    how many delete commits produced them, and the snapshot's
+    ``eq_deletes`` list is empty afterwards.
 
     Mechanics: the position-visible rows (eq deletes NOT applied) carry
-    (file, pos, per-file seq); each eq file contributes the positions it
-    would have deleted via one sequence-scoped semi-join, and the
-    matched (file, pos) pairs write their bitmaps EXECUTOR-SIDE
+    (file, pos); `_eq_delete_join` semi-joins them once per key column,
+    and the matched (file, pos) pairs write their bitmaps EXECUTOR-SIDE
     (_write_position_deletes — positions never reach the driver; only
     the O(hit files) name table collects for the commit). The folded eq
     files stay on disk for older snapshots' time-travel reads and are
-    reclaimed by expire_snapshots.
+    reclaimed by expire_snapshots. ``eq_files_folded`` counts the eq
+    files that still bind (a dropped key column's files are discarded).
 
     Returns {new_version, eq_files_folded, delete_files, deleted_rows}.
     """
-    from pyspark.sql import functions as F
-
     base = current_version(table_dir)
     m = load_manifest(table_dir)
     all_eq = m.get("eq_deletes") or []
@@ -2999,36 +2813,13 @@ def rewrite_eq_deletes(spark, table_dir: str) -> dict:
         vis = _read_files_visible(
             spark, table_dir, m["files"], manifest=m,
             with_file_col=True, apply_eq=False,
+        ).withColumn("_pkey", _file_pathkey_col())
+        matched = _eq_delete_join(spark, table_dir, m, m["files"], vis, "left_semi")
+        # distinct: a row matching keys of several columns must delete
+        # once; bitmaps then write executor-side, positions never collected
+        written = _write_position_deletes(
+            matched.select("_pkey", "_pos").distinct(), table_dir
         )
-        base_df = spark.createDataFrame(
-            [
-                (_entry_abspath(table_dir, e), int(e.get("seq", 0)))
-                for e in m["files"]
-            ],
-            "_pkey string, _fseq int",
-        )
-        vis = vis.withColumn("_pkey", _file_pathkey_col()).join(
-            F.broadcast(base_df), "_pkey"
-        )
-        matched = None
-        for e in eqs:
-            cur = _eq_current_col(m, e)
-            n_keys, _ = _footer_stats(os.path.join(table_dir, e["path"]))
-            kdf = spark.read.parquet(
-                os.path.join(table_dir, e["path"])
-            ).toDF("_eqk")
-            if n_keys <= 5_000_000:  # executor-memory-sized → broadcast
-                kdf = F.broadcast(kdf)
-            h = vis.join(
-                kdf,
-                (F.col(cur) == F.col("_eqk"))
-                & (F.col("_fseq") < F.lit(int(e.get("seq", 0)))),
-                "left_semi",
-            ).select("_pkey", "_pos")
-            matched = h if matched is None else matched.unionByName(h)
-        # distinct: a row matching several eq files must delete once;
-        # bitmaps then write executor-side, positions never collected
-        written = _write_position_deletes(matched.distinct(), table_dir)
     new_files, n_delete_files, deleted_rows = _attach_deletes(
         table_dir, m["files"], written
     )
@@ -3038,7 +2829,7 @@ def rewrite_eq_deletes(spark, table_dir: str) -> dict:
     )
     return {
         "new_version": v,
-        "eq_files_folded": len(all_eq),
+        "eq_files_folded": len(eqs),
         "delete_files": n_delete_files,
         "deleted_rows": deleted_rows,
     }

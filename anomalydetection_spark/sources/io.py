@@ -33,10 +33,10 @@ def iceberg_available(spark: SparkSession) -> bool:
 def read_table(spark: SparkSession, path_or_table: str, fmt: str = "auto") -> DataFrame:
     """Iceberg table if the runtime has it (and fmt allows), else parquet.
 
-    ``fmt='docstore'`` drives the from-scratch DataSourceV2 table format
-    (sources/docstore.py): snapshot-manifest planning, atomic version-hint
-    commits, stats-based file pruning — the jar-less stand-in proving the
-    engine's V2 contract end-to-end (tests/test_docstore.py)."""
+    ``fmt='docstore'`` reads the from-scratch table format
+    (sources/docstore.py) through ``docstore.load``: the main head's
+    visible rows from manifest-planned parquet scans — the jar-less
+    stand-in for the Iceberg read (tests/test_docstore.py)."""
     if fmt == "iceberg" or (fmt == "auto" and "/" not in path_or_table):
         if not iceberg_available(spark):
             raise RuntimeError(
@@ -47,8 +47,7 @@ def read_table(spark: SparkSession, path_or_table: str, fmt: str = "auto") -> Da
     if fmt == "docstore":
         from anomalydetection_spark.sources import docstore
 
-        docstore.register(spark)
-        return spark.read.format("docstore").option("path", path_or_table).load()
+        return docstore.load(spark, path_or_table)
     if fmt == "orc":
         return spark.read.orc(path_or_table)
     return spark.read.parquet(path_or_table)

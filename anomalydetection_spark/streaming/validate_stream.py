@@ -838,22 +838,21 @@ def start_cdc_validation_stream(
         invalid = sorted((changed & done) | ripple)
         if invalid:
             validator.manifest.invalidate(invalid)
-        docs = spark.read.format("docstore").option("path", table_dir).load()
+        docs = docstore.load(spark, table_dir)
         # metadata partition enumeration + file-bounded loads, exactly as
         # run_docstore_incremental: the re-validation scans open only the
-        # pending partitions' files (partition_in is plan-stable, safe on
-        # reused frames); spanning/legacy layouts degrade to row filters
+        # pending partitions' files; spanning/legacy layouts degrade to
+        # row filters
         pvals = docstore.partition_values(table_dir)
 
         def _bounded(ids):
-            rd = (
-                spark.read.format("docstore")
-                .option("path", table_dir)
-                .option("partition_in", ",".join(str(int(p)) for p in ids))
+            return scope_partition_filter(
+                docstore.load(
+                    spark, table_dir, where={"partition_id": ids},
+                    journal=validator.docstore_journal,
+                ),
+                ids,
             )
-            if validator.docstore_journal:
-                rd = rd.option("journal", validator.docstore_journal)
-            return scope_partition_filter(rd.load(), ids)
 
         validator.run(
             docs, media, baseline, cfg,

@@ -247,7 +247,7 @@ def main(argv: list[str] | None = None) -> int:
             )
         else:  # compact / rewrite-eq-deletes / build-sidecars need Spark
             spark = get_spark(app_name="validate-maintenance", master=args.master)
-            ds.register(spark)  # compact reads/writes format("docstore")
+            ds.register(spark)  # compact writes format("docstore")
             if args.maintenance == "compact":
                 v = ds.compact_snapshot(
                     spark, args.docs_path, n_files=args.compact_files,
@@ -275,8 +275,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.docs_path and args.docs_format == "docstore":
         from anomalydetection_spark.sources import docstore as _ds
 
-        _ds.register(spark)
-        docs = spark.read.format("docstore").option("path", args.docs_path).load()
+        docs = _ds.load(spark, args.docs_path)
     elif args.docs_path:
         docs = spark.read.parquet(args.docs_path)
     else:
@@ -284,8 +283,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.media_path and args.media_format == "docstore":
         from anomalydetection_spark.sources import docstore as _mds
 
-        _mds.register(spark)
-        media = spark.read.format("docstore").option("path", args.media_path).load()
+        media = _mds.load(spark, args.media_path)
     elif args.media_path:
         media = spark.read.parquet(args.media_path)
     else:

@@ -1,9 +1,11 @@
 """DataSourceV2 contract: the from-scratch `docstore` table format.
 
-Proves write_table/read_table drive a REAL V2 path (BatchScan over a
-Python data source — not a parquet alias) with the three Iceberg
-properties the engine depends on: snapshot-atomic commits, manifest-driven
-scan planning, and stats-based file pruning from pushed filters.
+Proves ``spark.read.format("docstore")`` drives a REAL V2 path (BatchScan
+over a Python data source — not a parquet alias), that read_table /
+``docstore.load`` return the same visible rows from parquet scans, and
+the three Iceberg properties the engine depends on: snapshot-atomic
+commits, manifest-driven scan planning, and stats-based file pruning
+(``load(where=…)``, evidenced by the opened-file journal).
 """
 
 from __future__ import annotations
@@ -48,16 +50,25 @@ def table(spark, tmp_path_factory):
 
 def test_roundtrip_v2_plan(spark, table):
     """Nested span structs survive the Arrow write/read round-trip row for
-    row, and the physical plan is a V2 BatchScan of the python source."""
+    row through both read paths: the format("docstore") reader plans a V2
+    BatchScan of the python source, read_table (docstore.load) plain
+    parquet scans of the manifest's files."""
     path, docs = table
+
+    def plan(df):
+        return spark._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            df._jdf.queryExecution(), "formatted"
+        )
+
+    docstore.register(spark)
+    v2 = spark.read.format("docstore").option("path", path).load()
     back = read_table(spark, path, fmt="docstore")
-    assert back.schema.simpleString() == docs.schema.simpleString()
-    assert _docs_key(back) == _docs_key(docs)
-    plan = spark._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        back._jdf.queryExecution(), "formatted"
-    )
-    assert "BatchScan docstore" in plan, plan
-    assert "Scan parquet" not in plan  # the V2 source, not a parquet alias
+    for df in (v2, back):
+        assert df.schema.simpleString() == docs.schema.simpleString()
+        assert _docs_key(df) == _docs_key(docs)
+    assert "BatchScan docstore" in plan(v2), plan(v2)
+    assert "Scan parquet" not in plan(v2)  # the V2 source, not a parquet alias
+    assert "Scan parquet" in plan(back) and "BatchScan" not in plan(back)
 
 
 def test_manifest_commit_is_atomic_pointer(spark, table, tmp_path):
@@ -89,44 +100,48 @@ def test_manifest_commit_is_atomic_pointer(spark, table, tmp_path):
 
 
 def test_pushed_filter_prunes_files(spark, table, tmp_path):
-    """A partition_id predicate reaches the reader via pushFilters and
-    prunes whole files from the scan plan using manifest min/max stats —
-    evidenced by the reader's opened-file journal."""
+    """``load(where={"partition_id": [3]})`` prunes whole files from the
+    scan plan using manifest min/max stats — evidenced by the opened-file
+    journal — and the caller's row filter gives the exact rows."""
     path, _ = table
     n_files = len(load := json.load(open(os.path.join(path, f"manifest-v{docstore.current_version(path)}.json")))["files"])
     assert n_files >= 4, load  # repartition('partition_id') made several files
 
     journal = str(tmp_path / "journal")
     os.makedirs(journal)
-    docstore.register(spark)
-    pruned = (
-        spark.read.format("docstore")
-        .option("path", path)
-        .option("journal", journal)
-        .option("pruned_scan", "true")  # opt-in: one planned query per load()
-        .load()
-        .filter(F.col("partition_id") == 3)
-    )
+    pruned = docstore.load(
+        spark, path, where={"partition_id": [3]}, journal=journal
+    ).filter(F.col("partition_id") == 3)
     want = read_table(spark, path, fmt="docstore").filter("partition_id = 3")
     assert _docs_key(pruned) == _docs_key(want)
     opened = glob.glob(f"{journal}/opened-*")
     assert 0 < len(opened) < n_files  # pruning actually skipped files
 
-    # unfiltered read opens every committed file
+    # the format("docstore") reader prunes the same files by partition_in
+    journal_v2 = str(tmp_path / "journal_v2")
+    os.makedirs(journal_v2)
+    docstore.register(spark)
+    v2 = (
+        spark.read.format("docstore").option("path", path)
+        .option("partition_in", "3").option("journal", journal_v2).load()
+        .filter(F.col("partition_id") == 3)
+    )
+    assert _docs_key(v2) == _docs_key(want)
+    assert sorted(os.listdir(journal_v2)) == sorted(os.listdir(journal))
+
+    # an unbounded load opens every committed file
     journal2 = str(tmp_path / "journal2")
     os.makedirs(journal2)
-    spark.read.format("docstore").option("path", path).option(
-        "journal", journal2
-    ).load().count()
+    docstore.load(spark, path, journal=journal2).count()
     assert len(glob.glob(f"{journal2}/opened-*")) == n_files
 
 
 def test_float_columns_never_prune_nan_files(spark, tmp_path):
     """Manifest stats are NaN-blind for floats (pyarrow min_max and
     parquet footers skip NaN) while Spark orders NaN ABOVE every double —
-    so under pruned_scan a pushed `x > v` must never prune a file whose
-    only matching rows are NaN. Guarded by not recording float stats at
-    all (the opt-out answer to Iceberg's nan_value_counts)."""
+    so planning must never prune a file whose only matching rows are NaN.
+    Guarded by not recording float stats at all (the opt-out answer to
+    Iceberg's nan_value_counts)."""
     path = str(tmp_path / "nan_table")
     rows = [(i, 1.5, i % 2) for i in range(10)] + [
         (100 + i, float("nan"), 2) for i in range(5)
@@ -141,23 +156,17 @@ def test_float_columns_never_prune_nan_files(spark, tmp_path):
         assert "score" not in f["stats"], f["stats"]  # floats: no stats
         assert "doc_id" in f["stats"]                 # ints still prune
 
-    got = (
-        spark.read.format("docstore")
-        .option("path", path)
-        .option("pruned_scan", "true")
-        .load()
-        .filter(F.col("score") > 5.0)
-    )
-    # Spark: NaN > 5.0 is TRUE — all five NaN rows must survive the scan
+    # Spark: NaN > 5.0 is TRUE — all five NaN rows must survive the scan,
+    # also when planning is asked for the NaN value itself
+    got = docstore.load(spark, path).filter(F.col("score") > 5.0)
     assert got.count() == 5
+    nan_planned = docstore.load(spark, path, where={"score": [float("nan")]})
+    assert nan_planned.filter(F.isnan("score")).count() == 5
 
-    # null-safe equality to NULL pushed alongside a range filter must not
-    # blow up planning (pushFilters skips None-valued filters)
+    # a NULL wanted value never prunes (it matches no min/max), and the
+    # row filter still decides the rows
     both = (
-        spark.read.format("docstore")
-        .option("path", path)
-        .option("pruned_scan", "true")
-        .load()
+        docstore.load(spark, path, where={"doc_id": [None, 3]})
         .filter(F.col("doc_id").eqNullSafe(F.lit(None).cast("long")))
         .filter(F.col("doc_id") > 3)
     )
@@ -609,14 +618,9 @@ def test_layout_evolution_prunes_per_files_own_cluster_column(spark, tmp_path):
 
     def scan(journal, col, val):
         os.makedirs(journal)
-        df = (
-            spark.read.format("docstore")
-            .option("path", path)
-            .option("journal", journal)
-            .option("pruned_scan", "true")
-            .load()
-            .filter(F.col(col) == val)
-        )
+        df = docstore.load(
+            spark, path, where={col: [val]}, journal=journal
+        ).filter(F.col(col) == val)
         rows = sorted(r["user_id"] for r in df.collect())
         return rows, len(_glob.glob(f"{journal}/opened-*"))
 
@@ -715,24 +719,19 @@ def test_bucket_transform_prunes_point_lookups(spark, tmp_path):
     )
     assert wide == n_files
 
-    def lookup(pred):
-        j = str(tmp_path / f"j{abs(hash(pred))%99999}")
+    def lookup(ids):
+        j = str(tmp_path / f"j{len(ids)}")
         os.makedirs(j)
-        got = (
-            spark.read.format("docstore")
-            .option("path", path)
-            .option("pruned_scan", "true")
-            .option("journal", j)
-            .load()
-            .filter(pred)
-        )
+        got = docstore.load(
+            spark, path, where={"doc_id": ids}, journal=j
+        ).filter(F.col("doc_id").isin(ids))
         rows = sorted(r["doc_id"] for r in got.collect())
         return rows, len(glob.glob(f"{j}/opened-*"))
 
-    rows, opened = lookup("doc_id = 4242")
+    rows, opened = lookup([4242])
     assert rows == [4242]
     assert opened < n_files and opened <= 3  # range-partitioned buckets: ~1 file
-    rows, opened = lookup("doc_id IN (17, 4242, 7777)")
+    rows, opened = lookup([17, 4242, 7777])
     assert rows == [17, 4242, 7777]
     assert opened < n_files
 
@@ -764,21 +763,19 @@ def test_bucket_transform_string_keys_and_spec_evolution(spark, tmp_path):
         .mode("append").save()
     )
     man = docstore.load_manifest(path)
-    specs = docstore._bucket_specs_in(man["files"])
-    assert specs == {"doc_id": {8, 4}}
+    specs = {k for f in man["files"] for k in f["stats"] if k.startswith("__bucket_")}
+    assert specs == {"__bucket_doc_id_8", "__bucket_doc_id_4"}
     j = str(tmp_path / "jb")
     os.makedirs(j)
-    got = (
-        spark.read.format("docstore")
-        .option("path", path).option("pruned_scan", "true").option("journal", j)
-        .load().filter("doc_id = 'doc-003123'")
-    )
+    got = docstore.load(
+        spark, path, where={"doc_id": ["doc-003123"]}, journal=j
+    ).filter("doc_id = 'doc-003123'")
     assert [r["partition_id"] for r in got.collect()] == [1]
     opened = len(glob.glob(f"{j}/opened-*"))
     # old-spec files prune by __bucket_doc_id_8, new-spec by _4: at most
     # one file per spec survives the point lookup (range-bucket layout)
     assert opened <= 3 < len(man["files"])
-    full = spark.read.format("docstore").option("path", path).load()
+    full = docstore.load(spark, path)
     assert full.count() == 4000
 
 
@@ -842,11 +839,9 @@ def test_add_files_imports_parquet_without_copy(spark, tmp_path):
     # footer stats drive pruning exactly like written files
     j = str(tmp_path / "jimp")
     os.makedirs(j)
-    hit = (
-        spark.read.format("docstore")
-        .option("path", path).option("pruned_scan", "true").option("journal", j)
-        .load().filter("doc_id = 1500")
-    )
+    hit = docstore.load(
+        spark, path, where={"doc_id": [1500]}, journal=j
+    ).filter("doc_id = 1500")
     assert [r["doc_id"] for r in hit.collect()] == [1500]
     assert len(glob.glob(f"{j}/opened-*")) < 6
 
@@ -897,11 +892,9 @@ def test_add_files_distributes_footer_reads_above_threshold(spark, tmp_path):
     # range-clustered import: footer stats prune a point lookup
     j = str(tmp_path / "jmany")
     os.makedirs(j)
-    hit = (
-        spark.read.format("docstore")
-        .option("path", path).option("pruned_scan", "true").option("journal", j)
-        .load().filter("doc_id = 2000")
-    )
+    hit = docstore.load(
+        spark, path, where={"doc_id": [2000]}, journal=j
+    ).filter("doc_id = 2000")
     assert [r["doc_id"] for r in hit.collect()] == [2000]
     assert len(glob.glob(f"{j}/opened-*")) <= 2
 
@@ -934,28 +927,24 @@ def test_bloom_sidecars_prune_unclustered_point_lookups(spark, tmp_path):
         for f in man["files"]
     )
 
-    def lookup(pred):
-        j = str(tmp_path / f"j{abs(hash(pred)) % 99999}")
+    def lookup(ids):
+        j = str(tmp_path / f"j{ids[0]}-{len(ids)}")
         os.makedirs(j)
-        got = (
-            spark.read.format("docstore")
-            .option("path", path)
-            .option("pruned_scan", "true")
-            .option("journal", j)
-            .load().filter(pred)
-        )
+        got = docstore.load(
+            spark, path, where={"doc_id": ids}, journal=j
+        ).filter(F.col("doc_id").isin(ids))
         return (
             sorted(r["doc_id"] for r in got.collect()),
             len(glob.glob(f"{j}/opened-*")),
         )
 
-    rows, opened = lookup("doc_id = 4242")
+    rows, opened = lookup([4242])
     assert rows == [4242]
     assert opened <= 2  # the holder + at most a fpp straggler
-    rows, opened = lookup("doc_id = 99999999")  # absent key
+    rows, opened = lookup([99999999])  # absent key
     assert rows == []
     assert opened <= 1
-    rows, opened = lookup("doc_id IN (11, 4242)")
+    rows, opened = lookup([11, 4242])
     assert rows == [11, 4242]
     assert opened <= 3
     # unfiltered read is exact (pruning is planning-only)
@@ -1042,11 +1031,9 @@ def test_build_sidecars_backfills_imported_files(spark, tmp_path):
 
     j = str(tmp_path / "jb")
     os.makedirs(j)
-    got = (
-        spark.read.format("docstore")
-        .option("path", path).option("pruned_scan", "true").option("journal", j)
-        .load().filter("doc_id = 3210")
-    )
+    got = docstore.load(
+        spark, path, where={"doc_id": [3210]}, journal=j
+    ).filter("doc_id = 3210")
     assert [r["doc_id"] for r in got.collect()] == [3210]
     assert len(glob.glob(f"{j}/opened-*")) <= 2
 

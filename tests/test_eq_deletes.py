@@ -245,34 +245,34 @@ def _formatted(spark, df):
 
 
 def test_rewrite_eq_deletes_folds_many_commits(spark, table):
-    """Maintenance primitive #4 (round-4 verdict ask #5): 50
-    delete_where_eq commits grow the rewrite read path by one
-    sequence-scoped anti-join EACH; rewrite_eq_deletes folds them all
-    into per-file position deletes, after which the visible-rows plan
-    carries at most 2 joins (the single position anti-join + its
+    """Maintenance primitive #4: several delete_where_eq commits fold into
+    per-file position deletes, after which the visible-rows plan carries
+    at most 2 joins (the single position anti-join + its
     delete-file-to-data-file broadcast map) and rows are byte-identical —
     including the re-insert-escape rule, which position deletes encode
     structurally (the re-inserted file simply has no deleted positions).
-    Older snapshots still time-travel through the original eq files."""
+    Older snapshots still time-travel through the original eq files.
+    (The plan shape at hundreds of eq commits is
+    test_eq_delete_plans_one_join_per_key_column.)"""
     path, docs = table
     all_ids = _ids(docs)
-    victims = all_ids[:50]
-    for k in victims:  # 50 separate eq-delete COMMITS
+    victims = all_ids[:6]
+    for k in victims:  # 6 separate eq-delete COMMITS
         ds.delete_where_eq(spark, path, "doc_id", [k])
     # re-insert two victims AFTER their deletes: must stay visible
     back = docs.filter(F.col("doc_id").isin(victims[:2]))
     back.write.format("docstore").option("path", path).mode("append").save()
 
     m = ds.load_manifest(path)
-    assert len(m.get("eq_deletes") or []) == 50
+    assert len(m.get("eq_deletes") or []) == 6
     pre_rows = sorted(
         tuple(r) for r in _read(spark, path).select("doc_id", "partition_id").collect()
     )
     pre_version = m["version"]
 
     rep = ds.rewrite_eq_deletes(spark, path)
-    assert rep["eq_files_folded"] == 50
-    assert rep["deleted_rows"] == 50  # 50 victims, re-inserts escape
+    assert rep["eq_files_folded"] == 6
+    assert rep["deleted_rows"] == 6  # 6 victims, re-inserts escape
     m2 = ds.load_manifest(path)
     assert not m2.get("eq_deletes")
 
@@ -285,14 +285,9 @@ def test_rewrite_eq_deletes_folds_many_commits(spark, table):
     )
 
     # the rewrite/probe read path now plans ≤2 joins, no In literal
-    import re
-
     vis = ds._read_files_visible(spark, path, m2["files"], manifest=m2)
     plan = _formatted(spark, vis)
-    join_nodes = re.findall(
-        r"\(\d+\) (?:BroadcastHash|SortMerge|ShuffledHash)Join", plan
-    )
-    assert len(join_nodes) <= 2, plan
+    assert len(_join_nodes(plan)) <= 2, plan
     assert " IN (" not in plan
 
     # pre-fold snapshot still reads through the eq files (time travel)
@@ -302,6 +297,59 @@ def test_rewrite_eq_deletes_folds_many_commits(spark, table):
     # idempotent: a second fold is a no-op commit-free call
     rep2 = ds.rewrite_eq_deletes(spark, path)
     assert rep2["eq_files_folded"] == 0 and rep2["deleted_rows"] == 0
+
+
+def _join_nodes(plan: str) -> list[str]:
+    import re
+
+    return re.findall(r"\(\d+\) (?:BroadcastHash|SortMerge|ShuffledHash|BroadcastNestedLoop)Join", plan)
+
+
+def test_eq_delete_plans_one_join_per_key_column(spark, tmp_path):
+    """200 equality-delete commits on one key column (commits made with
+    the same commit_snapshot call delete_where_eq ends in, key files
+    written with pyarrow to keep the test fast) plan ONE sequence-scoped
+    join for that column — plus the data files' and the eq files'
+    sequence maps — on the read path and in the fold, instead of one
+    join per commit; rows stay exact, and re-inserted keys escape."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ds.register(spark)
+    path = str(tmp_path / "eq200")
+    spark.range(0, 400).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 4).alias("grp")
+    ).repartition(2).write.format("docstore").option("path", path).mode("append").save()
+    for k in range(200):  # keys 0, 2, 4, ... 398: one commit each
+        m = ds.load_manifest(path)
+        name = f"eqdelete-t{k:03d}.parquet"
+        pq.write_table(pa.table({"doc_id": pa.array([2 * k], pa.int64())}), f"{path}/{name}")
+        ds.commit_snapshot(
+            path, m["files"], m["schema"], expected_base=m["version"],
+            eq_deletes=list(m.get("eq_deletes") or [])
+            + [{"path": name, "col": "doc_id", "col_id": m["field_ids"]["doc_id"], "seq": None}],
+        )
+    # a key deleted by a commit, then re-inserted: the re-insert escapes
+    spark.createDataFrame([(10, 2)], "doc_id long, grp long").write.format(
+        "docstore"
+    ).option("path", path).mode("append").save()
+    m = ds.load_manifest(path)
+    assert len(m["eq_deletes"]) == 200
+    odd = set(range(1, 400, 2)) | {10}
+
+    got = ds.load(spark, path)
+    plan = _formatted(spark, got)
+    assert len(_join_nodes(plan)) == 3, plan  # file seq, eq seq, the anti-join
+    assert sorted(r["doc_id"] for r in got.collect()) == sorted(odd)
+
+    vis = ds._read_files_visible(
+        spark, path, m["files"], manifest=m, with_file_col=True, apply_eq=False
+    ).withColumn("_pkey", ds._file_pathkey_col())
+    fold = ds._eq_delete_join(spark, path, m, m["files"], vis, "left_semi")
+    assert len(_join_nodes(_formatted(spark, fold))) == 3
+    rep = ds.rewrite_eq_deletes(spark, path)
+    assert rep["eq_files_folded"] == 200 and rep["deleted_rows"] == 200
+    assert sorted(r["doc_id"] for r in ds.load(spark, path).collect()) == sorted(odd)
 
 
 def test_position_delete_antijoin_at_scale(spark, tmp_path):

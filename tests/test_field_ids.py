@@ -116,31 +116,30 @@ def test_rename_visible_in_cdc_stream(spark, table, tmp_path):
 
 
 def test_pruning_safe_across_rename(spark, table, tmp_path):
-    """Old files carry stats under the old name: a pushed filter on the new
-    name must not prune them (no stats for that name = never pruned), and
-    new files prune normally."""
+    """Old files carry stats under the old name: planning on the new name
+    reads them through the file's id map, so an old file is kept exactly
+    when its own bytes can hold a wanted value — never pruned on another
+    column's stats, never kept for lack of a stat under the new name."""
+    import os
+
     docstore.rename_column(table, "n", "count_n")
     _df(
         spark,
         "doc_id string, count_n int, partition_id int",
         [("d", 100, 1)],
     ).write.format("docstore").option("path", table).mode("append").save()
-    j = str(tmp_path / "journal")
-    import os
 
-    os.makedirs(j)
-    df = (
-        spark.read.format("docstore")
-        .option("path", table)
-        .option("pruned_scan", "true")
-        .option("journal", j)
-        .load()
-        .filter(F.col("count_n") >= 100)
-    )
-    assert {r["doc_id"] for r in df.collect()} == {"d"}
-    opened = os.listdir(j)
-    # old files must still be opened (their rows re-filtered post-scan)
-    assert len(opened) >= 2
+    def planned(values):
+        j = str(tmp_path / f"journal{len(values)}")
+        os.makedirs(j)
+        df = docstore.load(spark, table, where={"count_n": values}, journal=j)
+        got = {r["doc_id"] for r in df.filter(F.col("count_n").isin(values)).collect()}
+        return got, len(os.listdir(j))
+
+    # the old file holds count_n = 2 under its physical name n: it is opened
+    assert planned([2, 100]) == ({"b", "d"}, 2)
+    # its n stats [1, 3] exclude 100: only the new file is opened
+    assert planned([100]) == ({"d"}, 1)
 
 
 def test_legacy_manifest_without_field_ids_still_reads(spark, table):
