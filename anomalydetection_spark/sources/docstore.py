@@ -669,13 +669,14 @@ def _eq_current_col(manifest: dict, eq: dict) -> str | None:
 
 def _eq_value_filter(batch, src: str, values):
     """Remove batch rows whose ``src`` value appears in ``values``
-    (NULLs never match — eq-delete keys are written non-null)."""
+    (NULLs never match — eq-delete keys are written non-null). Keys are
+    cast to the column's type: older key files may hold another type."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     if src not in batch.schema.names or not values:
         return batch
-    vset = pa.array(list(values), type=batch.schema.field(src).type)
+    vset = pa.array(list(values)).cast(batch.schema.field(src).type)
     hit = pc.is_in(batch.column(src), value_set=vset)
     return batch.filter(pc.fill_null(pc.invert(hit), True))
 
@@ -2000,8 +2001,9 @@ def _eq_delete_join(spark, table_dir: str, m: dict, entries: list[dict], vis, ho
     keys. Each row picks up its data file's sequence through a
     file-count-sized broadcast keyed by canonical absolute path (so
     add_files imports bind too); a column's eq files are read as one
-    parquet scan per physical key name (renames) whose rows pick up their
-    file's sequence through a broadcast (eq file → seq) pair table; and a
+    parquet scan per physical key name (renames) and parquet type (key
+    files written before keys were cast to the column type), cast to the
+    column's current type, whose rows pick up their file's sequence through a broadcast (eq file → seq) pair table; and a
     row is deleted when some key equals its value and its file predates
     that key's delete. ``how='left_anti'`` keeps the rows no eq delete
     removes (reads); ``'left_semi'`` returns the rows some eq delete
@@ -2023,13 +2025,17 @@ def _eq_delete_join(spark, table_dir: str, m: dict, entries: list[dict], vis, ho
     )
     vis = vis.join(F.broadcast(file_seq), "_pkey", "left")
     hits = None
+    schema = StructType.fromJson(json.loads(m["schema"]))
     for cur, es in by_col.items():
+        metas = {e["path"]: pq.read_metadata(os.path.join(table_dir, e["path"])) for e in es}
+        scans: dict[tuple[str, str], list[str]] = {}
+        for e in es:
+            typ = str(metas[e["path"]].schema.to_arrow_schema().field(e["col"]).type)
+            scans.setdefault((e["col"], typ), []).append(os.path.join(table_dir, e["path"]))
         keys = None
-        for phys in sorted({e["col"] for e in es}):
-            k = spark.read.parquet(
-                *[os.path.join(table_dir, e["path"]) for e in es if e["col"] == phys]
-            ).select(
-                F.col(phys).alias("_eqk"),
+        for (phys, _), paths in sorted(scans.items()):
+            k = spark.read.parquet(*paths).select(
+                F.col(phys).cast(schema[cur].dataType).alias("_eqk"),
                 F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("_eqname"),
             )
             keys = k if keys is None else keys.unionByName(k)
@@ -2038,9 +2044,7 @@ def _eq_delete_join(spark, table_dir: str, m: dict, entries: list[dict], vis, ho
             "_eqname string, _eqseq int",
         )
         keys = keys.join(F.broadcast(eq_seq), "_eqname").drop("_eqname")
-        n_keys = sum(
-            pq.read_metadata(os.path.join(table_dir, e["path"])).num_rows for e in es
-        )
+        n_keys = sum(md.num_rows for md in metas.values())
         if n_keys <= 5_000_000:  # executor-memory-sized → broadcast
             keys = F.broadcast(keys)
         cond = (F.col(cur) == F.col("_eqk")) & (F.col("_fseq") < F.col("_eqseq"))
@@ -2057,12 +2061,12 @@ def load(
     table_dir: str,
     *,
     version: int | None = None,
-    ref: str | None = None,
     where: dict | None = None,
     journal: str | None = None,
 ):
-    """The engine's batch read of a docstore snapshot (``version``, named
-    ``ref``, or the main head): the manifest loads once, `plan_files`
+    """The engine's batch read of a docstore snapshot (``version``, or the
+    main head; a branch or tag reads as ``version=resolve_ref(table_dir,
+    name)``): the manifest loads once, `plan_files`
     keeps the files that can hold ``where``'s values, and the kept files'
     visible rows come back from JVM parquet scans (`_read_files_visible`).
 
@@ -2072,9 +2076,7 @@ def load(
     so every action on the returned frame reads the same files.
     ``journal``: a directory that receives an ``opened-<file>`` marker
     per planned file (scan-bounding evidence for tests)."""
-    m = load_manifest(
-        table_dir, int(version) if version is not None else None, ref=ref
-    )
+    m = load_manifest(table_dir, version)
     kept = plan_files(table_dir, m, where)
     if journal:
         for f in kept:
@@ -2739,7 +2741,7 @@ def delete_where_eq(spark, table_dir: str, key_col: str, keys) -> dict:
         )
     tmpdir = os.path.join(table_dir, f"._eqtmp.{uuid.uuid4().hex}")
     (
-        keys.select(F.col(key_col))
+        keys.select(F.col(key_col).cast(schema[key_col].dataType).alias(key_col))
         .where(F.col(key_col).isNotNull())
         .distinct()
         .coalesce(1)

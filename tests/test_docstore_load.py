@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import glob
 import os
-import re
 
 from pyspark.sql import functions as F
 
@@ -136,17 +135,73 @@ def test_load_matches_python_reader_on_hostile_table(spark, tmp_path):
     assert len(_rows(old, old_names)) == 400 - 40 - 3
 
 
+def _docstore_batch_reads(source: str) -> list[int]:
+    """Lines of ``source`` that may open a batch read through the Python
+    reader: a ``.format(x)`` call, or a call with a ``format=``/``source=``
+    keyword, where ``x`` is ``"docstore"`` or not a literal at all (a
+    variable could hold it), unless the call chain is a write or a
+    ``readStream``."""
+    import ast
+
+    def chain(node):
+        names = []
+        while isinstance(node, (ast.Attribute, ast.Call, ast.Subscript)):
+            if isinstance(node, ast.Attribute):
+                names.append(node.attr)
+            node = node.value if not isinstance(node, ast.Call) else node.func
+        return names, node
+
+    def may_name_docstore(arg):
+        return not isinstance(arg, ast.Constant) or arg.value == "docstore"
+
+    hits = []
+    for node in ast.walk(ast.parse(source)):
+        if not isinstance(node, ast.Call):
+            continue
+        args = [k.value for k in node.keywords if k.arg in ("format", "source")]
+        if isinstance(node.func, ast.Attribute) and node.func.attr == "format":
+            args += node.args[:1]
+        if not any(may_name_docstore(a) for a in args):
+            continue
+        names, root = chain(node.func)
+        if isinstance(root, (ast.Constant, ast.JoinedStr)):
+            continue  # str.format
+        if {"write", "writeStream", "readStream"} & set(names):
+            continue
+        hits.append(node.lineno)
+    return hits
+
+
+def test_docstore_read_detector_catches_every_spelling():
+    flagged = [
+        'spark.read.format("docstore").option("path", p).load()',
+        'spark.read.option("path", p).format("docstore").load()',
+        'spark.read.load(p, format="docstore")',
+        "spark.read.format(fmt).load(p)",
+        'r = spark.read\nr.format("docstore").load(p)',
+    ]
+    spared = [
+        'df.write.format("docstore").option("path", p).save()',
+        'spark.readStream.format("docstore").option("path", p).load()',
+        'spark.read.format("iceberg").load(p)',
+        'df.writeStream.format("memory").start()',
+        '"{}-{}".format(a, b)',
+        "SQL.format(cx=cx)",
+    ]
+    assert [bool(_docstore_batch_reads(s)) for s in flagged] == [True] * len(flagged)
+    assert [bool(_docstore_batch_reads(s)) for s in spared] == [False] * len(spared)
+
+
 def test_engine_reads_docstore_only_through_load():
     """The engine has one batch read path: no module but the docstore
-    source itself may call ``spark.read.format("docstore")`` (the
-    Python reader). CDC streaming (``readStream``) is exempt."""
-    pattern = re.compile(r"\bread\s*\.\s*format\(\s*[\"']docstore[\"']")
+    source itself may read a table through ``spark.read`` with the
+    ``docstore`` format (the Python reader), however the read is spelled.
+    CDC streaming (``readStream``) is exempt."""
     offenders = []
     for f in glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True):
         rel = os.path.relpath(f, PACKAGE).replace(os.sep, "/")
         if rel == "sources/docstore.py":
             continue
         with open(f, encoding="utf-8") as fh:
-            if pattern.search(fh.read()):
-                offenders.append(rel)
+            offenders += [f"{rel}:{n}" for n in _docstore_batch_reads(fh.read())]
     assert offenders == [], offenders

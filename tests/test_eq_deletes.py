@@ -352,6 +352,43 @@ def test_eq_delete_plans_one_join_per_key_column(spark, tmp_path):
     assert sorted(r["doc_id"] for r in ds.load(spark, path).collect()) == sorted(odd)
 
 
+def test_eq_delete_keys_of_other_types_bind(spark, tmp_path):
+    """Keys given as an int DataFrame, a list and a string DataFrame on a
+    long key column are cast to the column's type at write, so one scan
+    reads them all; a key file of another parquet type (string keys as
+    older writes left them, here written with pyarrow) gets its own scan,
+    cast the same way. `load`, the Python reader and the fold agree."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ds.register(spark)
+    path = str(tmp_path / "typed")
+    spark.range(0, 40).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 4).alias("grp")
+    ).write.format("docstore").option("path", path).mode("append").save()
+    ds.delete_where_eq(spark, path, "doc_id", spark.createDataFrame([(1,), (2,)], "doc_id int"))
+    ds.delete_where_eq(spark, path, "doc_id", [3, 4])
+    ds.delete_where_eq(spark, path, "doc_id", spark.createDataFrame([("5",)], "doc_id string"))
+    m = ds.load_manifest(path)
+    assert {
+        str(pq.read_schema(f"{path}/{e['path']}").field("doc_id").type)
+        for e in m["eq_deletes"]
+    } == {"int64"}
+    name = "eqdelete-str.parquet"
+    pq.write_table(pa.table({"doc_id": pa.array(["6"], pa.string())}), f"{path}/{name}")
+    ds.commit_snapshot(
+        path, m["files"], m["schema"], expected_base=m["version"],
+        eq_deletes=m["eq_deletes"]
+        + [{"path": name, "col": "doc_id", "col_id": m["field_ids"]["doc_id"], "seq": None}],
+    )
+    want = [0] + list(range(7, 40))
+    assert _ids(ds.load(spark, path)) == want
+    assert _ids(_read(spark, path)) == want
+    rep = ds.rewrite_eq_deletes(spark, path)
+    assert rep["eq_files_folded"] == 4 and rep["deleted_rows"] == 6
+    assert _ids(ds.load(spark, path)) == want
+
+
 def test_position_delete_antijoin_at_scale(spark, tmp_path):
     """Round-4 verdict weak #2 done-criterion: ≥10⁵ deleted positions
     across files must apply through the distributed anti-join — no
